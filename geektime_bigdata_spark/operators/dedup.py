@@ -47,8 +47,9 @@ from geektime_bigdata_spark.functions import (
     values_relation,
 )
 from geektime_bigdata_spark.registry import (
-    adaptive_spread,
-    parallel_table,
+    ARROW_PASS_BYTES,
+    ROW_WORK_BYTES,
+    spread,
     table,
 )
 from geektime_bigdata_spark.session import CORPUS_CACHE_LEVEL
@@ -81,17 +82,17 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     working set a shingle-based pipeline has to hold somewhere anyway;
     in production it is the persisted intermediate a dedup job writes
     once and reuses across stages."""
-    # r18 measured revert (guide §1.1 record): switching this spread to
-    # the size-adaptive rule (width 4 at sf0.1) was tried and REVERTED
+    # r18 measured revert (guide §1.1 record): spreading this head at
+    # ARROW_PASS_BYTES (width 4 at sf0.1) was tried and REVERTED
     # on an interleaved same-session A/B — the light consumers were
     # flat but ngram_jaccard_pairs_dfcapped's candidate self-join reads
     # the cached relation's partitioning and its WALL doubled
     # (0.9-1.2 s -> 2.0-2.2 s at slightly lower CPU): the heavy
-    # join tiers genuinely use the 32-way layout. The fixed spread
-    # stays for this family head; duplicate_span_stats' OWN positional
-    # head (which no join reuses) took the adaptive rule with a clean
+    # join tiers genuinely use the 32-way layout, which ROW_WORK_BYTES
+    # keeps at sf0.1. duplicate_span_stats' OWN positional head (which
+    # no join reuses) takes ARROW_PASS_BYTES with a clean
     # 12.7 -> 2.2 CPU-s win.
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     return (
         docs.select("doc_id", tokens().alias("toks"))
         .select("doc_id", F.explode(shingles()).alias("shingle"))
@@ -237,7 +238,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     against it, and uncached each side re-ran the whole
     explode+md5+16-agg pipeline (plan-dedup never fires on uncached
     twins under AQE)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     tf = (
         docs.select("doc_id", F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
@@ -826,7 +827,7 @@ def _contam_scored(
     )
     train = sh.filter(F.col("doc_id") % EVAL_SET_MOD != 0)
     n_train = (
-        parallel_table(spark, sf_dir, "documents")
+        spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
         .filter(F.col("doc_id") % EVAL_SET_MOD != 0)
         .count()
     )  # tiny scalar, same style as bm25's n_docs
@@ -985,7 +986,7 @@ def contamination_suite_report(
     eval set. The oracle mirrors every step including the cap and the
     strong floor."""
     sh = _doc_shingles(spark, sf_dir)
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     row = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         *[
@@ -1122,7 +1123,7 @@ def decontaminate_corpus(
         F.max("score_micros").cast("long").alias("top_micros"),
     )
     train_docs = (
-        parallel_table(spark, sf_dir, "documents")
+        spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
         .filter(F.col("doc_id") % EVAL_SET_MOD != 0)
         .select("doc_id")
     )
@@ -1150,7 +1151,7 @@ def bow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the projection). ASCII tokens sort identically under Spark's and
     DuckDB's lexicographic collation, so the fingerprints are
     engine-identical."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     fp = F.md5(
         F.concat_ws(" ", F.array_sort(F.split(F.col("text"), " ")))
     )
@@ -1784,14 +1785,16 @@ def neardup_reach_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size gate the other graph ops use, the whole DP runs DRIVER-side
     # over the collected edges (exact integer recurrence, identical
     # raise semantics) — the old per-round lazy-chain gate cost up to
-    # RCTE_MAX_DEPTH sequential collect jobs; the big-graph branch
-    # keeps the distributed DP unchanged.
-    n_edges = edges.count()
+    # RCTE_MAX_DEPTH sequential collect jobs. One bounded collect both
+    # gates and feeds the driver DP; on the big-graph branch it is one
+    # extra job (at most SMALL_GRAPH_EDGES + 1 rows) ahead of the
+    # distributed DP.
+    rows = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
+    small = len(rows) <= SMALL_GRAPH_EDGES
     total_paths = 0
-    if n_edges <= SMALL_GRAPH_EDGES:
+    if small:
         from collections import defaultdict
 
-        rows = edges.collect()
         adj: dict = defaultdict(list)
         cnt_d: dict = defaultdict(int)
         for r in rows:
@@ -1840,7 +1843,6 @@ def neardup_reach_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration is otherwise 32 near-empty tasks of pure scheduling
     # overhead, and the 1-task localCheckpoint costs one job); a big
     # one keeps the cached distribution.
-    small = n_edges <= SMALL_GRAPH_EDGES
     edges_rec = edges.coalesce(1).localCheckpoint() if small else edges
     # r18 STEP-BY-2 recursion (VERDICT item 7 — halve the UnionLoop's
     # per-iteration scheduling floor): seed with path lengths 1 and 2,
@@ -2428,17 +2430,17 @@ def edit_distance_pairs_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE partition, and the levenshtein DP — the op's entire CPU —
     # pipelines into that single task (stage profile: 1.24 s CPU on 1
     # task). A round-robin respread between the window and the verify
-    # costs one sub-MB shuffle and runs the DP at full parallelism; at
-    # corpus scale the window output is large and the respread is a
-    # cheap rebalance (the parallel_table rationale). The DP itself is
+    # costs one sub-MB shuffle and runs the DP across cores; it is
+    # per-row work, so it takes the ROW_WORK_BYTES width. The DP itself is
     # the THRESHOLD form — banded O(threshold x len) instead of
     # O(len^2), returning -1 for pairs beyond ED_MAX_DIST — so the
     # >=0 filter keeps exactly the rows the unbounded form kept, with
     # identical distances (exact within the threshold by definition).
-    pairs = (
-        r.select("doc_id", "head", F.explode("succ").alias("s"))
-        .filter(F.col("s.d").isNotNull())
-        .repartition(spark.sparkContext.defaultParallelism)
+    pairs = spread(
+        r.select("doc_id", "head", F.explode("succ").alias("s")).filter(
+            F.col("s.d").isNotNull()
+        ),
+        ROW_WORK_BYTES,
     )
     dist = F.levenshtein("head", F.col("s.h"), ED_MAX_DIST).cast("long")
     return (
@@ -2527,9 +2529,9 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic islands trick (pos - row_number() is constant within a
     run) on a window PARTITIONED BY doc_id — no unpartitioned window
     anywhere."""
-    # adaptive spread (r18): this head's own A/B read 12.7 -> 2.2
-    # CPU-s / 1.28 -> 0.87 s at sf0.1 vs the fixed 32-way spread
-    docs = adaptive_spread(spark, sf_dir, "documents").select(
+    # ARROW_PASS_BYTES spread (r18): this head's own A/B read 12.7 ->
+    # 2.2 CPU-s / 1.28 -> 0.87 s at sf0.1 vs a 32-way spread
+    docs = spread(table(spark, sf_dir, "documents"), ARROW_PASS_BYTES).select(
         "doc_id", tokens().alias("toks")
     )
     # positional shingles off arrays_zip of offset slices (r17, guide

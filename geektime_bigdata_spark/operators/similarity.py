@@ -45,7 +45,7 @@ from geektime_bigdata_spark.functions import (
     values_relation,
     vec_norm,
 )
-from geektime_bigdata_spark.registry import parallel_table, table
+from geektime_bigdata_spark.registry import ROW_WORK_BYTES, spread, table
 from geektime_bigdata_spark.session import register_session_memo
 
 N_PLANES = 8
@@ -196,11 +196,11 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions over ONE hash shuffle on ``label`` — never a
     posexplode (which would multiply the shuffle 64x). Output is wide
     (c0..c63, rounded 6dp) so the oracle compares scalar columns, not
-    arrays. parallel_table: the single-file scan otherwise leaves all 64
-    partial aggregates on one core (measured 2.6s -> ~0.3s at sf0.1);
-    exact_sum's integer partials are order-independent, so the
-    repartition cannot perturb the result."""
-    e = parallel_table(spark, sf_dir, "embeddings")
+    arrays. Spread at ROW_WORK_BYTES: the single-file scan otherwise
+    leaves all 64 partial aggregates on one core (measured 2.6s -> ~0.3s
+    at sf0.1); exact_sum's integer partials are order-independent, so
+    the repartition cannot perturb the result."""
+    e = spread(table(spark, sf_dir, "embeddings"), ROW_WORK_BYTES)
 
     return (
         e.groupBy("label")
@@ -265,7 +265,7 @@ def _ivf_probe_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     enter codegen) evaluated up to twice per consumer; the r17 plan
     shows five such folds in semantic_dedup_multiprobe alone.
 
-    Natural scan splits, NOT parallel_table (the r17
+    Natural scan splits, NOT a registry spread (the r17
     embedding_gram_matrix lesson, guide §4.3): the per-partition work
     is numpy-vectorized, so a 32-way spread of the small corpus only
     multiplies Python-worker/Arrow per-task overhead; at real scale
@@ -840,7 +840,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # natural scan splits, NOT parallel_table (r17, guide §4.3): the
+    # natural scan splits, NOT a registry spread (r17, guide §4.3): the
     # per-partition work here is numpy-VECTORIZED (one einsum per
     # batch), so the spread hint only multiplied Python-worker/Arrow
     # per-task overhead — 32 near-idle workers for one small einsum
@@ -942,7 +942,7 @@ def kmeans_train(
     scalars and one inertia long — vectors never leave the cluster.
     Pytest enforces Lloyd's contract: inertia is non-increasing across
     iterations (up to the 1e-6 centroid quantization)."""
-    e = parallel_table(spark, sf_dir, "embeddings")
+    e = spread(table(spark, sf_dir, "embeddings"), ROW_WORK_BYTES)
     cent = label_centroids(spark, sf_dir).select(
         F.col("label").alias("cell"),
         *[F.col(f"c{i}") for i in range(N_DIMS)],

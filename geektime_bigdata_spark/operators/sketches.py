@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geektime_bigdata_spark.registry import parallel_table, table
+from geektime_bigdata_spark.registry import table
 
 HLL_RSD = 0.02  # target relative standard deviation for HLL++
 PCT_ACCURACY = 10000  # percentile_approx accuracy knob (1/accuracy error)
@@ -77,8 +77,8 @@ def _term_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree or the MG guarantee would be validated against a different N
     than the headline word counts.
 
-    r17 measured revert (guide §1.1 record): a parallel_table spread of
-    the scan REGRESSED the sketch family 6.9 -> 20.6 CPU-s at sf0.1 —
+    r17 measured revert (guide §1.1 record): a 32-way spread of the
+    scan REGRESSED the sketch family 6.9 -> 20.6 CPU-s at sf0.1 —
     once the MG update is batch-vectorized, per-task Python worker
     overhead is the dominant term and the 32-way spread multiplies it
     (the same failure the pyds fan-out sweep measured). On a real

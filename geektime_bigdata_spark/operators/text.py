@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geektime_bigdata_spark.functions import grid_round
-from geektime_bigdata_spark.registry import parallel_table, table
+from geektime_bigdata_spark.registry import ROW_WORK_BYTES, spread, table
 from geektime_bigdata_spark.session import register_session_memo
 
 
@@ -244,7 +244,7 @@ def positional_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (homework-4's index stops at doc ids + counts). Pure
     explode-with-ordinal projection; consumers aggregate or join on
     (doc_id, pos) arithmetic."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     return (
         docs.select(
             "doc_id",

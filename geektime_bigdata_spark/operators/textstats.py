@@ -12,7 +12,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geektime_bigdata_spark.functions import grid_round
-from geektime_bigdata_spark.registry import adaptive_spread, parallel_table, table
+from geektime_bigdata_spark.registry import (
+    ARROW_PASS_BYTES,
+    ROW_WORK_BYTES,
+    spread,
+    table,
+)
 
 # Tiny per-language marker lists for the n-gram/stopword heuristic.
 # The synthetic corpus shares one vocabulary, so predictions are uniform —
@@ -39,7 +44,7 @@ def _n_tokens(col: str = "text") -> Column:
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count, regex (BPE-ish) piece count, distinct-type
     count, and chars-per-token — the basic curation statistics."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     # staged split (HOFs/array ops defeat codegen CSE — see
     # doc_quality_scores)
     return docs.select(
@@ -70,7 +75,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure projection with NO shuffle at all (the earlier explode+groupBy
     formulation moved every token through an exchange; this moves
     nothing). At 100 TB this runs at scan speed."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
 
     def hits(markers: tuple[str, ...]) -> Column:
         arr = ", ".join("'" + m + "'" for m in markers)
@@ -115,7 +120,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange plus an Expand for the distinct). Integer sums divided once
     at the end reproduce the oracle's ``avg`` bit-for-bit (int sums are
     exact in doubles)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     stop_arr = ", ".join("'" + w + "'" for w in STOPWORDS)
     # token array staged in its own projection: higher-order-function
     # subtrees are exempt from codegen subexpression elimination, so an
@@ -188,7 +193,7 @@ def source_fair_quality_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = doc_quality_scores(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
-    src = parallel_table(spark, sf_dir, "documents").select(
+    src = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES).select(
         "doc_id", "source"
     )
     w = Window.partitionBy("source").orderBy("quality_score", "doc_id")
@@ -240,7 +245,7 @@ def source_fair_quality_caps(
     quality = doc_quality_scores(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
-    src = parallel_table(spark, sf_dir, "documents").select(
+    src = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES).select(
         "doc_id", "source"
     )
     scored = quality.join(src, "doc_id")
@@ -290,7 +295,7 @@ def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     WholeStageCodegen (the Generate never materializes per-position
     copies of ``text``; the map-side partial min means the exchange
     carries one row per (doc, block), not per position)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     positions = docs.filter(F.length("text") >= KGRAM).select(
         "doc_id",
         "text",
@@ -370,7 +375,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical document fingerprint: md5 over normalized text (lowercase,
     trimmed, whitespace collapsed) — the key an exact-dedup or incremental
     ingest pipeline carries per document."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), "\\s+", " ")))
     return docs.select(
         "doc_id",
@@ -528,7 +533,7 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers before one grid round. ``ln`` itself relies on both
     engines' libm agreeing — empirically exact for tfidf/bm25 across
     two driver rounds."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     # r17 (guide §2.3 aggregate-before-shuffle): everything downstream
     # is a function of the per-doc term frequency, so the token explode
     # runs ONCE into a (doc_id, word, tf) aggregate (map-side partials
@@ -634,7 +639,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered — no global sort), then a broadcast semi-flag join back
     over the token stream and a single global ratio row. The top-K list
     is K rows, broadcastable at any corpus scale."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     toks = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -677,7 +682,7 @@ def packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one partition, while shard-local packing (how real corpora
     are stored: one packer per input shard) keeps the window partitioned
     and each shard's layout independent of cluster size."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     w = (
         Window.partitionBy("source")
@@ -721,7 +726,7 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate precisely because merging would duplicate the non-cheap
     expressions — measured 2.9x faster at sf0.1 (median 0.73s ->
     0.25s), bit-identical output."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     staged = (
         docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
@@ -772,7 +777,7 @@ def length_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contract edge has no float at all. floor(log2(n)) is exact for
     IEEE doubles at these magnitudes (log2 of 2^k is exactly k; between
     powers the floor is unambiguous)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     b = (
         docs.filter(_n_tokens() >= 1)
         .select(F.size(F.split(F.col("text"), " ")).alias("nt"))
@@ -808,7 +813,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer in micro-units), so every group mean is an integer-sum /
     count division — order-independent and engine-identical; token
     counts are already integers."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     # staged split (see doc_quality_scores: HOFs defeat codegen CSE)
     base = docs.select(
         "lang", "source", F.split(F.col("text"), " ").alias("toks")
@@ -851,7 +856,7 @@ def blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership does not), no shuffle at all: a pure scan-speed map pass.
     The keep rule is the integer comparison ``20 * n_hits < n_tokens``
     (exactly "hit fraction < 5%") — no float anywhere."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     lst = ", ".join(f"'{w}'" for w in BLOCKLIST)
     # stage split AND the hit filter once (HOFs defeat codegen CSE; the
     # inlined form ran the blocklist filter three times per row)
@@ -903,7 +908,7 @@ def source_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle and grid-rounds to 1e-6. A single-word vocabulary has a
     zero denominator — slope is DEFINED as 0.0 there (no distribution
     to fit), mirrored in the oracle."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     counts = (
         docs.select(
             "source", F.explode(F.split(F.col("text"), " ")).alias("word")
@@ -982,7 +987,7 @@ def source_zipf_slope_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums, multiplied by the exact integer group size; the
     closed-form slope runs identical IEEE ops in both engines;
     single-word vocabularies define slope 0.0."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     counts = (
         docs.select(
             "source", F.explode(F.split(F.col("text"), " ")).alias("word")
@@ -1052,7 +1057,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-token source lists, never |vocab_a| x |vocab_b|. Output is
     O(sources^2) rows — a driver-scale report. Integer-ratio Jaccard
     on the 1e-6 grid."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     # cached (r17, guide §2.4): three consumers (the size aggregate and
     # both sides of the token join) re-ran the explode+distinct pass
     v = docs.select(
@@ -1256,7 +1261,7 @@ def source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the 1e-6 grid. The aggregate is |sources| rows — driver-scale;
     the only corpus-scale work is the per-source token count (one
     shuffle)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(_n_tokens()).alias("n_tokens"),
@@ -1292,7 +1297,7 @@ def token_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines' libm agreeing — empirically exact across three driver
     rounds of tfidf/bm25/logprob. One (doc, word) shuffle, output is
     one row per doc."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     tf = (
         docs.select(
             "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
@@ -1424,7 +1429,7 @@ def mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch factor is one LONG/LONG divide on the grid. Driver-scale
     output (|sources| rows); the only corpus-scale work is the token
     count already shared with the weights query."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(_n_tokens()).alias("n_tokens"),
@@ -1459,7 +1464,7 @@ def truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently discards 30% of a language's tokens is a data bug). One
     shuffle-free projection + one aggregate; all-integer surface plus
     one integer-ratio grid double."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     n = _n_tokens().cast("long")
     lost = F.greatest(n - F.lit(TRUNC_MAX_TOKENS), F.lit(0).cast("long"))
     per_doc = docs.select(
@@ -1624,7 +1629,7 @@ def bpe_compression_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reuses the encode oracle's unrolled merge chain with a
     per-source final rollup, so encode and this report verify each
     other's merge sequence."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     arrs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
     before = arrs.select(
         "doc_id", F.size("arr").cast("long").alias("n_before")
@@ -1695,7 +1700,7 @@ def quality_logreg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the integer fold — every hashed value is identical IEEE ops
     in both engines. Output: one row per feature,
     (feature, w_micros after step 1, grad_micros at w1)."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     stop_arr = ", ".join("'" + w + "'" for w in STOPWORDS)
     lst = ", ".join(f"'{w}'" for w in BLOCKLIST)
     staged = docs.select(F.split(F.col("text"), " ").alias("toks")).select(
@@ -1789,7 +1794,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the per-doc integer sum, one grid round at the end; ``ln``
     under the established libm-agreement precedent. MLE, no smoothing:
     a document's own bigrams always have corpus count >= 1."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     staged = docs.select(
         "doc_id",
         F.expr("filter(split(text, ' '), t -> t != '')").alias("ft"),
@@ -1852,12 +1857,11 @@ def _bpe_corpus_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr) with empty tokens dropped — the array-native BPE
     corpus representation: the whole merge step then happens IN-ROW
     (no per-step shuffle of the token stream at all; only the pair
-    COUNT aggregates). r18: size-adaptive spread instead of the fixed
-    defaultParallelism one — every loop pass (Arrow pair partials,
-    apply checkpoint) pays a per-task floor times the width, and the
-    fixed 32 lost to 8 cores in the r17 scaling bench; see
-    :func:`...registry.adaptive_spread` for the A/B numbers."""
-    docs = adaptive_spread(spark, sf_dir, "documents")
+    COUNT aggregates). Spread at ARROW_PASS_BYTES, not ROW_WORK_BYTES:
+    every loop pass (Arrow pair partials, apply checkpoint) pays a
+    per-task floor times the width; see
+    :data:`...registry.ARROW_PASS_BYTES` for the A/B numbers."""
+    docs = spread(table(spark, sf_dir, "documents"), ARROW_PASS_BYTES)
     return docs.select(
         "doc_id",
         F.expr("filter(split(text, ' '), t -> t != '')").alias("arr"),
@@ -2014,7 +2018,7 @@ def pii_canary_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dialect discipline: patterns stay inside the RE2∩Java-identical
     subset (see module constants) — the one regex family both engines
     execute byte-for-byte."""
-    docs = parallel_table(spark, sf_dir, "documents")
+    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     canaried = docs.select(
         "doc_id",
         F.concat(

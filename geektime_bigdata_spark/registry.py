@@ -88,58 +88,46 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_timestamps(name, df)
 
 
-def parallel_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a table and spread it across all cores before CPU-heavy
-    per-row work (explode/hash pipelines).
+# Bytes of input per task for each cost class :func:`spread` serves.
+#
+# Per-row explode/hash work (shingle, minhash, token pipelines): the
+# testdata tables are single parquet files, so the scan arrives as ONE
+# partition and any expensive projection above it runs on one core; a
+# round-robin respread of the base rows costs one tiny shuffle and
+# parallelizes everything downstream (measured 2.9x on the minhash
+# shingle pipeline at sf0.1). 16 KiB is the largest power of two that
+# keeps the full-width spread these sites were measured at for sf0.1
+# documents (594,568 B) and embeddings (798,695 B) up to 32 cores —
+# the dfcapped candidate self-join reads the cached shingle relation's
+# layout, and a 4-way layout doubled its wall at 32 cores.
+ROW_WORK_BYTES = 16 << 10
+# Arrow/checkpoint pass loops (BPE corpus, duplicate_span_stats head):
+# every pass pays a per-task Python-worker/scheduling floor times the
+# width — the r17 8-core bench beat 32 cores on bpe_encode_corpus, and
+# a width A/B on the encode loop read 29 CPU-s at width 32 vs ~5 at
+# width 4 with the best wall. 128 KiB per task keeps tasks comfortably
+# larger than that floor.
+ARROW_PASS_BYTES = 128 << 10
+# Streaming state-store partitions (streaming.windows): streaming stages
+# are exempt from AQE coalescing, and a same-session A/B on
+# streaming_hourly_rollup read 16-25 CPU-s at 32 state partitions vs
+# 2.7-3.6 at this width, with identical results.
+STATE_PARTITION_BYTES = 512 << 10
 
-    The testdata tables are single parquet files, so the scan arrives as
-    ONE partition and any expensive projection above it runs on one core.
-    A round-robin repartition of the (small) base rows costs one tiny
-    shuffle and parallelizes everything downstream — measured 2.9x on the
-    minhash shingle pipeline at sf0.1. On a real multi-file/partitioned
-    table at cluster scale the scan is already parallel and this becomes a
-    cheap rebalance; at 100 TB one would instead rely on the natural file
-    splits and drop this hint."""
-    df = table(spark, sf_dir, name)
-    return df.repartition(spark.sparkContext.defaultParallelism)
+
+def spread_width(df: DataFrame, bytes_per_task: int) -> int:
+    """Task count for ``df``: its Catalyst size estimate (the
+    optimized plan's ``sizeInBytes`` — for a parquet scan, the bytes on
+    disk) over ``bytes_per_task``, clamped to [1, defaultParallelism].
+    Small inputs get a few fat tasks instead of many near-empty ones,
+    and the width grows with the data until the core-count cap (the
+    scale case pins the cap). The estimate comes from the plan, so it
+    holds for any filesystem the scan can read."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(par, size // bytes_per_task))
 
 
-def adaptive_spread(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    bytes_per_task: int = 128 << 10,
-) -> DataFrame:
-    """Size-adaptive variant of :func:`parallel_table` (r18, guide
-    §2.5 / VERDICT r17 item 4): spread width = input bytes /
-    ``bytes_per_task``, clamped to [1, defaultParallelism] — so small
-    inputs get a few fat tasks instead of defaultParallelism near-empty
-    ones, and the width GROWS with the data until the core-count cap.
-
-    Motivation (measured): the BPE loop's fixed 32-way spread cost
-    more in per-task overhead than it bought at sf0.1 — the r17
-    8-core bench beat 32 cores on bpe_encode_corpus (ratio 0.68), and
-    a width A/B on the encode loop read 29 CPU-s at width 32 vs ~5 at
-    width 4 with the best wall (every Arrow/checkpoint pass pays a
-    per-task Python-worker/scheduling floor times the width). 128 KiB
-    of compressed parquet per task keeps tasks comfortably larger
-    than that floor; at cluster scale the clamp pins the cap and the
-    scan's own file splits carry the parallelism anyway."""
-    df = table(spark, sf_dir, name)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        size = None
-    par = spark.sparkContext.defaultParallelism
-    width = (
-        par if size is None else max(1, min(par, size // bytes_per_task))
-    )
-    return df.repartition(int(width))
+def spread(df: DataFrame, bytes_per_task: int) -> DataFrame:
+    """Round-robin ``df`` across :func:`spread_width` tasks."""
+    return df.repartition(spread_width(df, bytes_per_task))

@@ -141,9 +141,14 @@ def release_caches(spark: SparkSession) -> None:
     CacheManager-tracked plan), then drop the driver references; the
     checkpoint RDD blocks themselves are reclaimed asynchronously by
     the ContextCleaner once those references are garbage-collected.
-    State is tiny by construction (the Gram memo holds d² longs), so
-    lazy reclamation is acceptable — the contract here is accurate
-    bookkeeping, not synchronous block eviction."""
+    State is NOT small: the token-tf memo (one row per distinct
+    (doc, token)) and the IVF-assignment memo (one row per embedding)
+    hold corpus-size checkpoints, next to small ones such as the Gram
+    memo's d² longs. Reclamation is lazy — their blocks stay resident
+    until the driver's next GC lets the ContextCleaner drop them, so
+    right after this call executor memory still holds them. The
+    contract here is accurate bookkeeping, not synchronous block
+    eviction."""
     spark.catalog.clearCache()
     for memo in _SESSION_MEMOS:
         for v in memo.values():

@@ -28,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from geektime_bigdata_spark.registry import table
+from geektime_bigdata_spark.registry import (
+    STATE_PARTITION_BYTES,
+    spread_width,
+    table,
+)
 
 SESSION_GAP_SEC = 30 * 60
 
@@ -38,42 +42,21 @@ from contextlib import contextmanager  # noqa: E402
 
 @contextmanager
 def _sized_state_partitions(spark: SparkSession, sf_dir: str):
-    """Size the stateful-shuffle partition count by INPUT BYTES for the
-    duration of a streaming query start (r18, guide §2.5 / VERDICT r17
-    item 4): streaming stages are exempt from AQE coalescing, so every
-    stateful operator otherwise plans `spark.sql.shuffle.partitions`
-    (= local core count) state-store partitions regardless of data —
-    32 near-empty RocksDB/HDFS state tasks per micro-batch was the
-    r17 scaling bench's 8-beats-32-cores signature on
-    streaming_hourly_rollup, and a same-session A/B read 16-25 CPU-s
-    at 32 partitions vs 2.7-3.6 at the rule's width (identical
-    results; stateful aggregation here is exact-integer, so
-    partitioning cannot perturb any hashed value).
+    """Size the stateful-shuffle partition count by input size for the
+    duration of a streaming query start: streaming stages are exempt
+    from AQE coalescing, so every stateful operator otherwise plans
+    `spark.sql.shuffle.partitions` (= local core count) state-store
+    partitions regardless of data. Stateful aggregation here is
+    exact-integer, so partitioning cannot perturb any hashed value.
 
-    Rule: partitions = events bytes / 512 KiB, clamped to
-    [1, defaultParallelism] — grows with the per-trigger volume, caps
-    at cluster parallelism (the scale case pins the cap). The conf is
-    restored after `.start()`: Structured Streaming pins the partition
-    count in the checkpoint's offset metadata at batch 0, so later
-    batches are unaffected by the restore."""
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        size = None
-    par = spark.sparkContext.defaultParallelism
-    parts = (
-        par if size is None else max(1, min(par, size // (512 << 10)))
-    )
+    Count = :func:`...registry.spread_width` of ``events`` at
+    ``STATE_PARTITION_BYTES`` (see there for the measured reason). The
+    conf is restored after `.start()`: Structured Streaming pins the
+    partition count in the checkpoint's offset metadata at batch 0, so
+    later batches are unaffected by the restore."""
+    parts = spread_width(table(spark, sf_dir, "events"), STATE_PARTITION_BYTES)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(parts)))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         yield
     finally:

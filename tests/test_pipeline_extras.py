@@ -559,10 +559,9 @@ def test_bpe_batched_conflict_rule(spark, monkeypatch):
         + [(200 + i, "d e") for i in range(8)]
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    # r18: the BPE corpus rides adaptive_spread (size-adaptive width)
     monkeypatch.setattr(
-        "geektime_bigdata_spark.operators.textstats.adaptive_spread",
-        lambda *a, **k: docs,
+        "geektime_bigdata_spark.operators.textstats.table",
+        lambda *a: docs,
     )
     out = {
         (r["step"], r["merge_rank"]): r
@@ -586,8 +585,8 @@ def test_bpe_batched_overlap_parity(spark, monkeypatch):
         [(1, "a a a a a")], "doc_id long, text string"
     )
     monkeypatch.setattr(
-        "geektime_bigdata_spark.operators.textstats.adaptive_spread",
-        lambda *a, **k: docs,
+        "geektime_bigdata_spark.operators.textstats.table",
+        lambda *a: docs,
     )
     out = bpe_train_merges_batched(spark, "x", rounds=1).collect()
     assert len(out) == 1
@@ -612,7 +611,7 @@ def test_winnow_pairs_catch_copied_passage(spark, monkeypatch):
         "doc_id long, text string",
     )
     monkeypatch.setattr(
-        "geektime_bigdata_spark.operators.textstats.parallel_table",
+        "geektime_bigdata_spark.operators.textstats.table",
         lambda *a: docs,
     )
     pairs = {

@@ -142,7 +142,7 @@ def test_range_join_avoids_nested_loop(spark, sf_dir):
 
 def test_textstats_projections_single_rebalance(spark, sf_dir):
     """lang-ID and quality scoring must stay pure projections: the only
-    exchange allowed is the explicit input rebalance (parallel_table),
+    exchange allowed is the explicit input rebalance (registry.spread),
     never a token-level aggregation shuffle."""
     from geektime_bigdata_spark.operators import textstats
 
@@ -191,7 +191,7 @@ def test_cluster_balanced_sample_single_cell_shuffle(spark, sf_dir):
 
 def test_blocklist_scrub_single_rebalance(spark, sf_dir):
     """The scrub is a pure map pass: the ONLY exchange is
-    parallel_table's deliberate rebalance (the array lambdas never
+    registry.spread's deliberate rebalance (the array lambdas never
     leave the row — no aggregate, no join, no window)."""
     from geektime_bigdata_spark.operators import textstats
 

@@ -505,3 +505,38 @@ def test_snm_skew_bounded(spark, tmp_path):
         f"skewed SNM wall time {skew_t:.2f}s vs uniform {uniform_t:.2f}s — "
         "super-linear behavior under block skew"
     )
+
+
+def test_state_partitions_read_plan_size_for_uri_paths(spark, sf_medium):
+    """The streaming state-partition count comes from the plan's size
+    estimate, so a ``file://`` URI sizes exactly like the plain path —
+    no filesystem probe that could fall back to full width."""
+    from geektime_bigdata_spark.streaming.windows import (
+        _sized_state_partitions,
+    )
+
+    seen = []
+    for path in (sf_medium, "file://" + sf_medium):
+        with _sized_state_partitions(spark, path):
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert seen == ["1", "1"], seen
+
+
+def test_spread_width_follows_input_bytes(spark, sf_medium):
+    """``spread`` width = on-disk bytes / bytes_per_task, clamped to
+    [1, defaultParallelism], for each of the three cost classes."""
+    import os
+
+    from geektime_bigdata_spark.registry import (
+        ARROW_PASS_BYTES,
+        ROW_WORK_BYTES,
+        STATE_PARTITION_BYTES,
+        spread,
+        table,
+    )
+
+    size = os.path.getsize(os.path.join(sf_medium, "documents.parquet"))
+    par = spark.sparkContext.defaultParallelism
+    for q in (ROW_WORK_BYTES, ARROW_PASS_BYTES, STATE_PARTITION_BYTES):
+        df = spread(table(spark, sf_medium, "documents"), q)
+        assert df.rdd.getNumPartitions() == max(1, min(par, size // q)), q

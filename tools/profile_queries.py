@@ -23,32 +23,7 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-
-def _tree_cpu_seconds() -> float:
-    hz = os.sysconf("SC_CLK_TCK")
-    procs = {}
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as fh:
-                data = fh.read()
-            rest = data[data.rindex(")") + 2:].split()
-            procs[int(entry)] = (
-                int(rest[1]),
-                int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14]),
-            )
-        except (OSError, ValueError, IndexError):
-            continue
-    tree = {os.getpid()}
-    grew = True
-    while grew:
-        grew = False
-        for pid, (ppid, _) in procs.items():
-            if ppid in tree and pid not in tree:
-                tree.add(pid)
-                grew = True
-    return sum(procs[p][1] for p in tree if p in procs) / hz
+from bench import _tree_cpu_seconds  # noqa: E402
 
 
 def main() -> None:
