@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
 import uuid
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any, Iterable, Iterator
@@ -643,6 +644,7 @@ def stream_roundtrip_stats(spark, sf_dir: str):
 
     from geektime_bigdata_spark.functions import lift_collected
     from geektime_bigdata_spark.registry import table
+    from geektime_bigdata_spark.streaming.windows import _await_or_raise
 
     register(spark)
     root = tempfile.mkdtemp(prefix="gbs_pyds_stream_")
@@ -681,7 +683,7 @@ def stream_roundtrip_stats(spark, sf_dir: str):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_or_raise(q, 300)
         back = spark.read.format("gbs_tsv").schema(ddl).load(out)
         res = back.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
@@ -692,12 +694,24 @@ def stream_roundtrip_stats(spark, sf_dir: str):
         shutil.rmtree(root, ignore_errors=True)
 
 
+_REGISTER_LOCK = threading.Lock()
+
+
 def register(spark) -> None:
     """Idempotent registration of the datasource under ``gbs_tsv``.
 
     Python-datasource filter pushdown ships behind a flag (readers
     implementing ``pushFilters`` refuse to plan without it); it is a
     runtime-settable SQL conf, enabled here so registration is the one
-    call a session needs."""
+    call a session needs.
+
+    The JVM resolves ``format("gbs_tsv")`` through the calling thread's
+    active session, which is thread-local and unset on a fresh thread,
+    so registration makes ``spark`` active on the caller. Registering
+    is check-then-put in the JVM: a first registration racing another
+    thread's sees the name resolve mid-check and raises
+    DATA_SOURCE_ALREADY_EXISTS, hence the lock."""
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(GbsTsvDataSource)
+    with _REGISTER_LOCK:
+        spark.dataSource.register(GbsTsvDataSource)

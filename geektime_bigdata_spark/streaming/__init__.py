@@ -3,7 +3,6 @@ reference has zero streaming code; the `events` table is stream-shaped)."""
 
 from geektime_bigdata_spark.streaming.windows import (
     inspect_streaming_state,
-    read_events_stream,
     run_streaming_attribution,
     run_streaming_attribution_full_outer,
     run_streaming_attribution_outer,
@@ -19,7 +18,6 @@ from geektime_bigdata_spark.streaming.windows import (
 
 __all__ = [
     "inspect_streaming_state",
-    "read_events_stream",
     "run_streaming_attribution",
     "run_streaming_attribution_full_outer",
     "run_streaming_attribution_outer",

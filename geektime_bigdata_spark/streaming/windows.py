@@ -18,6 +18,7 @@ from __future__ import annotations
 import math
 import os
 import tempfile
+import threading
 import uuid
 from typing import Iterable
 
@@ -30,37 +31,94 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from geektime_bigdata_spark.registry import (
     STATE_PARTITION_BYTES,
+    _normalize_timestamps,
     spread_width,
     table,
 )
 
 SESSION_GAP_SEC = 30 * 60
 
+# One streaming start at a time per process: the set/start/restore scope
+# of :func:`_start` must not interleave with another thread's, or one
+# scope restores the value the other set.
+_START_LOCK = threading.Lock()
 
-from contextlib import contextmanager  # noqa: E402
+
+def _events_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """File-source stream over the events parquet, with the same ts
+    normalization as the batch registry, and its state-partition width.
+
+    File streams need an explicit schema; the one batch read that
+    supplies it also supplies the width — :func:`...registry.spread_width`
+    of the scan at ``STATE_PARTITION_BYTES`` — so a runner start pays a
+    single schema-inference job."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    stream = (
+        spark.readStream.schema(raw.schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    width = spread_width(raw, STATE_PARTITION_BYTES)
+    return _normalize_timestamps("events", stream), width
 
 
-@contextmanager
-def _sized_state_partitions(spark: SparkSession, sf_dir: str):
-    """Size the stateful-shuffle partition count by input size for the
-    duration of a streaming query start: streaming stages are exempt
-    from AQE coalescing, so every stateful operator otherwise plans
-    `spark.sql.shuffle.partitions` (= local core count) state-store
-    partitions regardless of data. Stateful aggregation here is
-    exact-integer, so partitioning cannot perturb any hashed value.
+def _start(writer, spark: SparkSession, width: int, conf: dict | None = None):
+    """``writer.start()`` with ``spark.sql.shuffle.partitions`` = ``width``
+    (plus any extra ``conf``), restoring the session conf as soon as
+    ``.start()`` returns.
 
-    Count = :func:`...registry.spread_width` of ``events`` at
-    ``STATE_PARTITION_BYTES`` (see there for the measured reason). The
-    conf is restored after `.start()`: Structured Streaming pins the
-    partition count in the checkpoint's offset metadata at batch 0, so
-    later batches are unaffected by the restore."""
-    parts = spread_width(table(spark, sf_dir, "events"), STATE_PARTITION_BYTES)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streaming stages are exempt from AQE coalescing, so every stateful
+    operator would otherwise plan the session's partition count (= local
+    core count) of state-store partitions regardless of data. Stateful
+    aggregation here is exact-integer, so the count cannot perturb any
+    hashed value. Restoring right after ``.start()`` is sound: the
+    query's StreamExecution clones the session, conf included, inside
+    ``start()``, and batch 0 pins the count in the checkpoint's offset
+    metadata. The lock does not cover another thread's batch query
+    planned during a start: it sees ``width``, which the determinism
+    contract makes result-neutral."""
+    scoped = {"spark.sql.shuffle.partitions": str(width), **(conf or {})}
+    with _START_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in scoped}
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
+        try:
+            return writer.start()
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def _run_to_memory(
+    df: DataFrame,
+    width: int,
+    mode: str,
+    timeout_sec: int,
+    *,
+    single_batch: bool = False,
+    conf: dict | None = None,
+) -> DataFrame:
+    """Drain ``df`` with ``availableNow`` into a fresh memory sink (temp
+    checkpoint, :func:`_start` scope), wait for it, and return the sink's
+    table. ``single_batch`` adds :func:`_assert_single_batch`."""
+    name = f"gbs_stream_{uuid.uuid4().hex[:12]}"
+    with tempfile.TemporaryDirectory() as ckpt:
+        writer = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        q = _start(writer, df.sparkSession, width, conf)
+        _await_or_raise(q, timeout_sec)
+        if single_batch:
+            _assert_single_batch(q)
+    return df.sparkSession.table(name)
 
 
 def _await_or_raise(q, timeout_sec: int) -> None:
@@ -114,38 +172,6 @@ def _exact_value_sum(rounded: int = 6):
     return (F.floor(x * k + F.lit(0.5)) / k).cast("double")
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet with the same ns->us
-    timestamp normalization as the batch registry (file streams require an
-    explicit schema; we take the raw one and convert)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _events_stream(spark, sf_dir)
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream with the same ns->us timestamp normalization as the batch
-    registry (the raw parquet long column arrives as-is in the stream)."""
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
-    elif ts_type == "timestamp_ntz":
-        # round-2 testdata ships TIMESTAMP(MICROS) without a timezone;
-        # watermarks on stream-stream joins require LTZ event time, and
-        # the UTC session makes the cast identity on the instant
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
 def run_streaming_hourly_rollup(
     spark: SparkSession, sf_dir: str, timeout_sec: int = 120
 ) -> DataFrame:
@@ -154,8 +180,7 @@ def run_streaming_hourly_rollup(
 
     Batch twin: :func:`...operators.windows.hourly_event_rollup` (the
     window start == date_trunc('hour', ts) for tumbling windows)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
@@ -170,20 +195,7 @@ def run_streaming_hourly_rollup(
             "total_value",
         )
     )
-    name = f"gbs_stream_hourly_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-    return spark.table(name)
+    return _run_to_memory(agg, width, "complete", timeout_sec)
 
 
 def run_streaming_sliding_counts(
@@ -194,8 +206,7 @@ def run_streaming_sliding_counts(
     :func:`...operators.windows.sliding_window_counts`. Same Expand
     (2 rows per event) + windowed state; watermark bounds state to the
     open windows only."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
@@ -205,20 +216,7 @@ def run_streaming_sliding_counts(
         )
         .select(F.col("w.start").alias("w_start"), "n", "total_value")
     )
-    name = f"gbs_stream_sliding_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-    return spark.table(name)
+    return _run_to_memory(agg, width, "complete", timeout_sec)
 
 
 def run_streaming_enriched_rollup(
@@ -234,8 +232,7 @@ def run_streaming_enriched_rollup(
     micro-batch while the dim is small and a shuffled stream-static
     join once it is not; a forced hint would pin the OOM path at
     scale."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -247,20 +244,7 @@ def run_streaming_enriched_rollup(
             _exact_value_sum().alias("total_value"),
         )
     )
-    name = f"gbs_stream_enriched_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-    return spark.table(name)
+    return _run_to_memory(agg, width, "complete", timeout_sec)
 
 
 def run_streaming_attribution(
@@ -273,8 +257,7 @@ def run_streaming_attribution(
     buffer forever). Batch twin: the pair set of
     :func:`...operators.joins.attribution_range_join` (pre-aggregation).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -295,20 +278,7 @@ def run_streaming_attribution(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") < F.col("p_ts")),
     ).select("purchase_id", "user_id", "c_ts")
-    name = f"gbs_stream_attr_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-    return spark.table(name)
+    return _run_to_memory(joined, width, "append", timeout_sec)
 
 
 def run_streaming_attribution_outer(
@@ -329,8 +299,7 @@ def run_streaming_attribution_outer(
     surface (see ``__spark_entry__``) additionally restricts null rows
     to purchases ≤ max(ts) - 3h — 1h inside the eviction bound, so the
     emitted set is fully deterministic and oracle-predictable."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -352,21 +321,9 @@ def run_streaming_attribution_outer(
         & (F.col("c_ts") < F.col("p_ts")),
         "leftOuter",
     ).select("purchase_id", "user_id", "p_ts", "c_ts")
-    name = f"gbs_stream_attr_outer_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-        _assert_single_batch(q)
-    return spark.table(name)
+    return _run_to_memory(
+        joined, width, "append", timeout_sec, single_batch=True
+    )
 
 
 def run_streaming_attribution_full_outer(
@@ -384,8 +341,7 @@ def run_streaming_attribution_full_outer(
     may withhold trailing null rows on either side — the driver surface
     (``__spark_entry__``) restricts null rows of BOTH sides to 1h
     inside the bound so the emitted set is oracle-predictable."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -411,21 +367,9 @@ def run_streaming_attribution_full_outer(
         & (F.col("c_ts") < F.col("p_ts")),
         "fullOuter",
     ).select("purchase_id", "p_user", "p_ts", "click_id", "c_user", "c_ts")
-    name = f"gbs_stream_attr_fo_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-        _assert_single_batch(q)
-    return spark.table(name)
+    return _run_to_memory(
+        joined, width, "append", timeout_sec, single_batch=True
+    )
 
 
 def run_streaming_session_windows(
@@ -443,8 +387,7 @@ def run_streaming_session_windows(
     hour's sessions under availableNow — complete re-emits the full
     session table, which for a drained source equals the batch answer
     exactly."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir)
+    stream, width = _events_source(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(
@@ -465,20 +408,7 @@ def run_streaming_session_windows(
             "session_value",
         )
     )
-    name = f"gbs_stream_swin_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-    return spark.table(name)
+    return _run_to_memory(agg, width, "complete", timeout_sec)
 
 
 def run_streaming_dedup(
@@ -497,28 +427,14 @@ def run_streaming_dedup(
     :func:`_assert_single_batch`): across batches, a key first arriving
     with an event time older than the advanced watermark would be
     dropped and the key set would diverge."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir).select(
-        "user_id", "event_type", "ts"
-    )
+    stream, width = _events_source(spark, sf_dir)
+    stream = stream.select("user_id", "event_type", "ts")
     deduped = stream.withWatermark("ts", "24 hours").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    name = f"gbs_stream_dedup_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
-        _assert_single_batch(q)
-    return spark.table(name)
+    return _run_to_memory(
+        deduped, width, "append", timeout_sec, single_batch=True
+    )
 
 
 from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
@@ -576,16 +492,11 @@ def run_streaming_user_totals_tws(
     ships broken (``cannot import name 'descriptor'``) and installs are
     disallowed. The pytest skips with that exact reason when protobuf
     is unusable; on a normal cluster image the operator runs as-is."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _events_stream(spark, sf_dir).select("user_id", "value")
-        out = stream.groupBy("user_id").transformWithStateInPandas(
+    stream, width = _events_source(spark, sf_dir)
+    out = (
+        stream.select("user_id", "value")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
             statefulProcessor=_UserTotalsProcessor(),
             outputStructType=(
                 "user_id long, n_events long, total_value_micros long"
@@ -593,38 +504,23 @@ def run_streaming_user_totals_tws(
             outputMode="Update",
             timeMode="None",
         )
-        name = f"gbs_stream_tws_{uuid.uuid4().hex[:8]}"
-        with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-            spark, sf_dir
-        ):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_raise(q, timeout_sec)
-        t = spark.table(name)
-        return (
-            t.groupBy("user_id")
-            .agg(
-                F.max(F.struct("n_events", "total_value_micros")).alias("s")
-            )
-            .select(
-                "user_id",
-                F.col("s.n_events").alias("n_events"),
-                F.col("s.total_value_micros").alias("total_value_micros"),
-            )
+    )
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+    }
+    t = _run_to_memory(out, width, "update", timeout_sec, conf=rocksdb)
+    return (
+        t.groupBy("user_id")
+        .agg(F.max(F.struct("n_events", "total_value_micros")).alias("s"))
+        .select(
+            "user_id",
+            F.col("s.n_events").alias("n_events"),
+            F.col("s.total_value_micros").alias("total_value_micros"),
+        )
+    )
 
 
 def run_streaming_upsert_sink(
@@ -639,10 +535,8 @@ def run_streaming_upsert_sink(
     rewrites only touched partitions. Returns the final state DataFrame."""
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir).select(
-        "user_id", "event_type", "ts", "value", "event_id"
-    )
+    stream, width = _events_source(spark, sf_dir)
+    stream = stream.select("user_id", "event_type", "ts", "value", "event_id")
     state_path = os.path.join(out_dir, "state")
 
     def merge_batch(batch_df, batch_id: int) -> None:
@@ -672,14 +566,12 @@ def run_streaming_upsert_sink(
         final.write.mode("overwrite").parquet(state_path)
 
     ckpt = os.path.join(out_dir, "ckpt")
-    with _sized_state_partitions(spark, sf_dir):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
+    writer = (
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    _await_or_raise(_start(writer, spark, width), timeout_sec)
     return spark.read.parquet(state_path)
 
 
@@ -762,10 +654,8 @@ def run_streaming_sessionization(
     n_events strictly grows within a session, the newest emission per
     (user_id, session_id) — picked by a struct-max — is the final row.
     With availableNow the last batch's snapshot IS the completed session."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _events_stream(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "value"
-    )
+    stream, width = _events_source(spark, sf_dir)
+    stream = stream.select("user_id", "ts", "event_id", "value")
     out = stream.groupBy("user_id").applyInPandasWithState(
         _sessionize_group,
         outputStructType=(
@@ -779,22 +669,9 @@ def run_streaming_sessionization(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"gbs_stream_sessions_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sized_state_partitions(
-        spark, sf_dir
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, timeout_sec)
+    t = _run_to_memory(out, width, "update", timeout_sec)
     # newest emission per session wins (n_events strictly grows; the
     # struct-max carries the matching value/duration along)
-    t = spark.table(name)
     return (
         t.groupBy("user_id", "session_id")
         .agg(

@@ -311,3 +311,81 @@ def test_stream_commit_removes_stale_replay_parts(tmp_path):
         "batch-000007-part-00000.tsv",
         "batch-000007-part-00001.tsv",
     ]
+
+
+def test_tsv_roundtrip_off_main_thread_matches_oracle(spark, sf_dir):
+    """``gbs_tsv`` resolves from a worker thread, whose JVM active
+    session starts unset, and the round trip still matches its oracle."""
+    import threading
+
+    import __spark_entry__ as entrymod
+    from tests.oracle import assert_matches_oracle, duckdb_connection
+
+    out: dict = {}
+
+    def run() -> None:
+        try:
+            out["df"] = pyds.tsv_roundtrip_stats(spark, sf_dir)
+        except Exception as exc:  # re-raised on the test thread
+            out["error"] = exc
+
+    worker = threading.Thread(target=run)
+    worker.start()
+    worker.join(300)
+    assert not worker.is_alive()
+    assert "error" not in out, out["error"]
+    con = duckdb_connection(sf_dir)
+    try:
+        sql = entrymod.oracle_sql()["pyds_tsv_roundtrip"]
+        assert_matches_oracle(out["df"], con, sql, "pyds_tsv_roundtrip")
+    finally:
+        con.close()
+
+
+def test_stream_roundtrip_timeout_raises_and_stops(spark, sf_dir, monkeypatch):
+    """A drain that does not finish in time raises ``TimeoutError`` and
+    stops the query instead of reading a partial sink."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    class StuckQuery:
+        name = "stuck"
+        stopped = False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StuckQuery()
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: q)
+    with pytest.raises(TimeoutError):
+        pyds.stream_roundtrip_stats(spark, sf_dir)
+    assert q.stopped
+
+
+def test_concurrent_first_registration_never_collides(spark):
+    """Eight threads registering ``gbs_tsv`` at once on a fresh session
+    all succeed: without serialization one of them sees the other's
+    half-finished registration and raises DATA_SOURCE_ALREADY_EXISTS."""
+    import threading
+
+    errors: list = []
+    for _ in range(10):
+        fresh = spark.newSession()
+        barrier = threading.Barrier(8, timeout=60)
+
+        def run() -> None:
+            barrier.wait()
+            try:
+                pyds.register(fresh)
+            except Exception as exc:  # collected and asserted below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=run) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+    assert errors == []

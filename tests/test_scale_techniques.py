@@ -507,19 +507,39 @@ def test_snm_skew_bounded(spark, tmp_path):
     )
 
 
-def test_state_partitions_read_plan_size_for_uri_paths(spark, sf_medium):
+def test_state_partitions_read_plan_size_for_uri_paths(
+    spark, sf_medium, monkeypatch
+):
     """The streaming state-partition count comes from the plan's size
     estimate, so a ``file://`` URI sizes exactly like the plain path —
-    no filesystem probe that could fall back to full width."""
-    from geektime_bigdata_spark.streaming.windows import (
-        _sized_state_partitions,
-    )
+    no filesystem probe that could fall back to full width. The count
+    is scoped to ``.start()``: while the query runs, the session's own
+    ``spark.sql.shuffle.partitions`` is already back."""
+    from geektime_bigdata_spark.streaming import windows
 
-    seen = []
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    started = []
+    await_or_raise = windows._await_or_raise
+
+    def spy(q, timeout_sec):
+        started.append(
+            (q, q.isActive, spark.conf.get("spark.sql.shuffle.partitions"))
+        )
+        await_or_raise(q, timeout_sec)
+
+    monkeypatch.setattr(windows, "_await_or_raise", spy)
     for path in (sf_medium, "file://" + sf_medium):
-        with _sized_state_partitions(spark, path):
-            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert seen == ["1", "1"], seen
+        windows.run_streaming_hourly_rollup(spark, path)
+    assert len(started) == 2
+    for q, active, parts_while_active in started:
+        state_parts = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+        assert state_parts == {1}, state_parts
+        assert active
+        assert parts_while_active == session_parts
 
 
 def test_spread_width_follows_input_bytes(spark, sf_medium):
