@@ -46,7 +46,7 @@ from geektime_bigdata_spark.functions import (
     vec_norm,
 )
 from geektime_bigdata_spark.registry import ROW_WORK_BYTES, spread, table
-from geektime_bigdata_spark.session import register_session_memo
+from geektime_bigdata_spark.session import session_memo
 
 N_PLANES = 8
 N_DIMS = 64
@@ -233,14 +233,6 @@ def _cells_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
 
 
-# one materialized IVF index per (applicationId, sf_dir) — the Arrow
-# probe pass pickles a fresh closure per call, so CacheManager's
-# canonical-plan dedup can never share a .cache() across calls; the
-# session memo is the seam (same pattern as _GRAM_FULL_MEMO). Cleared
-# by session.release_caches.
-_IVF_ASSIGNED_MEMO: dict = register_session_memo({})
-
-
 def _ivf_probe_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE Arrow-vectorized corpus pass computing, per vector, every
     per-row quantity the IVF family previously derived through
@@ -394,14 +386,11 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since r18 the assignment (and the bucket/norm/probe columns the
     family's consumers used to re-derive through per-row interpreted
     folds) comes from ONE Arrow-vectorized pass — see
-    :func:`_ivf_probe_pass` for the bit-identity argument. The memo is
-    the materialization seam: a mapInArrow plan pickles a fresh
-    closure per call, so CacheManager plan-dedup can never share a
-    ``.cache()`` across calls (the round-5 lesson); the
-    localCheckpoint'ed frame serves every consumer in the session and
-    is released by ``session.release_caches``. In production the index
-    is a persisted table built by an indexing job; the memo is its
-    in-session stand-in.
+    :func:`_ivf_probe_pass` for the bit-identity argument. The
+    localCheckpoint'ed frame is a :func:`session_memo` serving every
+    consumer in the session; in production the index is a persisted
+    table built by an indexing job, and the memo is its in-session
+    stand-in.
 
     r17 measured revert kept for the record (guide §1.1): sharing a
     cached (vec_id, embedding, d2s) array<struct> relation between
@@ -409,12 +398,11 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached nested column cost more than re-running the fold; the r18
     pass instead shares narrow scalar columns (two longs, a double, a
     10-long list), which the in-memory format decodes cheaply."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _IVF_ASSIGNED_MEMO.get(key)
-    if df is None:
-        df = _ivf_probe_pass(spark, sf_dir).localCheckpoint()
-        _IVF_ASSIGNED_MEMO[key] = df
-    return df
+    return session_memo(spark, sf_dir, _ivf_index)
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ivf_probe_pass(spark, sf_dir).localCheckpoint()
 
 
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1008,33 +996,24 @@ PCA_POWER_STEPS = 3
 PCA_TOP2_STEPS = 8  # block-iteration rounds; see embedding_pca_top2
 
 
-# one materialized symmetric Gram per (session, sf_dir) — see
-# _gram_full_checkpointed; cleared by session.release_caches
-_GRAM_FULL_MEMO: dict = register_session_memo({})
-
-
 def _gram_full_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL (symmetrized) Gram matrix, localCheckpoint'ed and
-    memoized per (applicationId, sf_dir): the corpus-scale cost of
-    every PCA-family consumer is this one X^T X pass, and because the
-    mapInPandas stage pickles a fresh closure per call, CacheManager's
-    canonical-plan dedup can never share it across calls — the
-    explicit memo is the seam (VERDICT r4 item 6's principle applied
-    to the second twice-derived relation). d^2 longs of state; cleared
-    by :func:`geektime_bigdata_spark.session.release_caches`."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _GRAM_FULL_MEMO.get(key)
-    if df is None:
-        # the union references tri twice; checkpoint so the Gram pass
-        # (mapInPandas einsum) runs once, not per reference
-        tri = embedding_gram_matrix(spark, sf_dir).localCheckpoint()
-        df = tri.unionByName(
-            tri.filter(F.col("i") < F.col("j")).select(
-                F.col("j").alias("i"), F.col("i").alias("j"), "gram_micros"
-            )
-        ).localCheckpoint()
-        _GRAM_FULL_MEMO[key] = df
-    return df
+    held in a :func:`session_memo`: the corpus-scale cost of every
+    PCA-family consumer is this one X^T X pass (VERDICT r4 item 6's
+    principle applied to the second twice-derived relation). d^2 longs
+    of state."""
+    return session_memo(spark, sf_dir, _gram_full)
+
+
+def _gram_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the union references tri twice; checkpoint so the Gram pass
+    # (mapInPandas einsum) runs once, not per reference
+    tri = embedding_gram_matrix(spark, sf_dir).localCheckpoint()
+    return tri.unionByName(
+        tri.filter(F.col("i") < F.col("j")).select(
+            F.col("j").alias("i"), F.col("i").alias("j"), "gram_micros"
+        )
+    ).localCheckpoint()
 
 
 def _pca_power_iter(spark, g, steps):

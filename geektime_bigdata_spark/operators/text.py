@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from geektime_bigdata_spark.functions import grid_round
 from geektime_bigdata_spark.registry import ROW_WORK_BYTES, spread, table
-from geektime_bigdata_spark.session import register_session_memo
+from geektime_bigdata_spark.session import session_memo
 
 
 def _tokens(df: DataFrame) -> DataFrame:
@@ -35,14 +35,6 @@ def _tokens(df: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.col("text"), " ")).alias("word"),
     ).filter(F.col("word") != "")
-
-
-# one materialized (doc_id, word, tf) relation per (applicationId,
-# sf_dir) — the Arrow counting pass pickles a fresh closure per call,
-# so CacheManager plan-dedup can never share a .cache() across calls;
-# the session memo is the seam (the _GRAM_FULL_MEMO pattern). Cleared
-# by session.release_caches.
-_TOKEN_TF_MEMO: dict = register_session_memo({})
 
 
 def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,11 +52,12 @@ def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     final groupBy-sum merges per-batch partials (each document's rows
     are atomic within one batch, so partials are already per-document
     counts — the sum is a cheap formality that keeps correctness
-    independent of that layout detail)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOKEN_TF_MEMO.get(key)
-    if df is not None:
-        return df
+    independent of that layout detail). Materialized once per
+    (session, sf_dir) through :func:`session_memo`."""
+    return session_memo(spark, sf_dir, _token_tf_pass)
+
+
+def _token_tf_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.col("text"), " ").alias("toks")
     )
@@ -103,14 +96,12 @@ def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in out.combine_chunks().to_batches():
                 yield b
 
-    tf = (
+    return (
         docs.mapInArrow(partials, "doc_id long, word string, tf long")
         .groupBy("doc_id", "word")
         .agg(F.sum("tf").alias("tf"))
         .localCheckpoint()
     )
-    _TOKEN_TF_MEMO[key] = tf
-    return tf
 
 
 def term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:

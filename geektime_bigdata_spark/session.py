@@ -13,6 +13,7 @@ value).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -105,19 +106,31 @@ from pyspark import StorageLevel  # noqa: E402
 
 CORPUS_CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
 
-_SESSION_MEMOS: list[dict] = []
+_MEMOS: dict = {}  # (build, applicationId, sf_dir) -> value
+_FILL_LOCKS: dict = {}  # same key -> the lock its one fill holds
+_FILL_LOCKS_GUARD = threading.Lock()
 
 
-def register_session_memo(memo: dict) -> dict:
-    """Register an operator-layer memo dict (keyed by applicationId) so
-    :func:`release_caches` clears it with the plan-level caches. For
-    relations whose plans embed a fresh pickled Python closure per call
-    (mapInPandas stages), CacheManager's canonical-plan dedup can never
+def session_memo(spark: SparkSession, sf_dir: str, build):
+    """``build(spark, sf_dir)``, computed once per (build, applicationId,
+    sf_dir) and cleared by :func:`release_caches`. For relations whose
+    plans embed a fresh pickled Python closure per call (mapInPandas /
+    mapInArrow stages), CacheManager's canonical-plan dedup can never
     match across calls — an explicit per-session memo of the
     checkpointed DataFrame is the seam that makes one materialization
-    serve every consumer in the session."""
-    _SESSION_MEMOS.append(memo)
-    return memo
+    serve every consumer in the session.
+
+    ``build`` must be a module-level function: its identity names the
+    memo. Each key fills under its own lock, so concurrent first callers
+    wait for one fill instead of each running ``build``; different keys
+    fill in parallel."""
+    key = (build, spark.sparkContext.applicationId, sf_dir)
+    with _FILL_LOCKS_GUARD:
+        lock = _FILL_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _MEMOS:
+            _MEMOS[key] = build(spark, sf_dir)
+        return _MEMOS[key]
 
 
 def release_caches(spark: SparkSession) -> None:
@@ -134,14 +147,12 @@ def release_caches(spark: SparkSession) -> None:
     ``clearCache`` unpersists lazily; subsequent queries simply re-cache
     what they need.
 
-    Registered session memos (ADVICE r5): memo values are typically
-    ``localCheckpoint``'ed DataFrames, whose block storage is NOT
-    tracked by CacheManager — ``clearCache`` never touches it.  We
-    best-effort ``unpersist()`` each memoized DataFrame (covers any
-    CacheManager-tracked plan), then drop the driver references; the
-    checkpoint RDD blocks themselves are reclaimed asynchronously by
-    the ContextCleaner once those references are garbage-collected.
-    State is NOT small: the token-tf memo (one row per distinct
+    Session memos (:func:`session_memo`, ADVICE r5) hold
+    ``localCheckpoint``'ed DataFrames, whose blocks CacheManager does
+    NOT track. We best-effort ``unpersist()`` each value, then drop the
+    driver references; the ContextCleaner reclaims the checkpoint
+    blocks once those references are garbage-collected. State is NOT
+    small: the token-tf memo (one row per distinct
     (doc, token)) and the IVF-assignment memo (one row per embedding)
     hold corpus-size checkpoints, next to small ones such as the Gram
     memo's d² longs. Reclamation is lazy — their blocks stay resident
@@ -150,12 +161,14 @@ def release_caches(spark: SparkSession) -> None:
     contract here is accurate bookkeeping, not synchronous block
     eviction."""
     spark.catalog.clearCache()
-    for memo in _SESSION_MEMOS:
-        for v in memo.values():
-            unpersist = getattr(v, "unpersist", None)
-            if callable(unpersist):
-                try:
-                    unpersist()
-                except Exception:
-                    pass  # already-released session; reference drop below suffices
-        memo.clear()
+    with _FILL_LOCKS_GUARD:
+        values = list(_MEMOS.values())
+        _MEMOS.clear()
+        _FILL_LOCKS.clear()
+    for v in values:
+        unpersist = getattr(v, "unpersist", None)
+        if callable(unpersist):
+            try:
+                unpersist()
+            except Exception:
+                pass  # already-released session; reference drop suffices

@@ -68,3 +68,17 @@ def test_cli_publish_writes_partitioned_corpus(spark, capsys, tmp_path):
         r["doc_id"] for r in spark.read.parquet(f"{out2}/corpus").collect()
     )
     assert a == b
+
+
+def test_cli_profile_prints_one_record(spark, sf_dir, capsys):
+    """``profile`` warms the query, then prints one JSON line whose
+    counts match the pinned warm profile of word_counts."""
+    import json
+
+    from tests.test_profile import WORD_COUNTS_WARM
+
+    assert main(["profile", "word_counts", "--sf-dir", sf_dir, "--reps", "1"]) == 0
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rec["name"] == "word_counts" and rec["executions"]
+    assert (rec["jobs"], rec["stages"], rec["skipped_stages"]) == WORD_COUNTS_WARM
+    assert len(rec["wall_s"]) == len(rec["cpu_s"]) == 1

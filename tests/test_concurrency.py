@@ -94,3 +94,35 @@ def test_concurrent_start_scopes_never_interleave(spark):
     assert len(seen) == 20 * len(widths)
     assert [p for p in seen if p[0] != p[1]] == []
     assert spark.conf.get(key) == before
+
+
+def test_cold_memo_key_fills_once_across_threads(spark):
+    """Eight threads (more than cores, short switch interval) asking for
+    one cold session-memo key run ``build`` once and all get its one
+    value."""
+    import sys
+    import threading
+    import time
+
+    from geektime_bigdata_spark.session import release_caches, session_memo
+
+    calls, ready = [], threading.Barrier(8)
+
+    def build(spark, sf_dir):
+        calls.append(sf_dir)
+        time.sleep(0.2)  # keep the fill open while the others arrive
+        return object()
+
+    def ask(_):
+        ready.wait()
+        return session_memo(spark, "cold-key", build)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            values = list(pool.map(ask, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+        release_caches(spark)
+    assert calls == ["cold-key"] and all(v is values[0] for v in values)

@@ -14,6 +14,9 @@ Ceilings are the r14 warm measurements + 3 slack (session-config
 jitter such as an AQE re-plan can move a count by one or two; the
 regression classes this guard exists for jump by tens — the r12
 checkpoint trap measured 139 vs 104 jobs on the same op).
+
+Jobs are counted by :func:`geektime_bigdata_spark.profile.profile`, a
+job-id window, so jobs submitted from any thread count.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry
+from geektime_bigdata_spark.profile import profile
 
 # (query, measured warm jobs r14 @ sf0.001, ceiling = measured + 3)
 CEILINGS = [
@@ -40,15 +44,12 @@ CEILINGS = [
 
 def _warm_job_count(spark, name, sf_dir):
     q = entry.queries()[name]
-    q(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    tracker = spark.sparkContext.statusTracker()
-    group = f"jobguard-{name}"
-    spark.sparkContext.setJobGroup(group, group)
-    try:
+
+    def run():
         q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    finally:
-        spark.sparkContext.setJobGroup(None, None)
-    return len(tracker.getJobIdsForGroup(group))
+
+    run()  # warm
+    return profile(spark, run)["jobs"]
 
 
 @pytest.mark.parametrize("name,measured,ceiling", CEILINGS)

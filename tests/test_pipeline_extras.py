@@ -1101,21 +1101,24 @@ def test_pii_canary_scrub_roundtrip(spark, sf_dir):
 
 
 def test_gram_memo_lifecycle(spark, sf_dir):
-    """The per-session Gram memo fills on first PCA use and is cleared
-    by release_caches (the documented lifecycle for operator memos)."""
+    """The per-session Gram memo fills on first PCA use, serves later
+    calls without a refill, and is cleared by release_caches (the
+    documented lifecycle for session memos)."""
+    from geektime_bigdata_spark import session
     from geektime_bigdata_spark.operators.similarity import (
-        _GRAM_FULL_MEMO,
+        _gram_full,
+        _gram_full_checkpointed,
         embedding_pca_power,
     )
-    from geektime_bigdata_spark.session import release_caches
 
-    release_caches(spark)
-    assert not _GRAM_FULL_MEMO
+    session.release_caches(spark)
+    assert not session._MEMOS
     embedding_pca_power(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _GRAM_FULL_MEMO
-    release_caches(spark)
-    assert not _GRAM_FULL_MEMO
+    key = (_gram_full, spark.sparkContext.applicationId, sf_dir)
+    assert key in session._MEMOS
+    assert _gram_full_checkpointed(spark, sf_dir) is session._MEMOS[key]
+    session.release_caches(spark)
+    assert not session._MEMOS
 
 
 def test_pii_regex_dialect_identical(spark):
