@@ -1,22 +1,33 @@
 """Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Each query is forced to full execution with a count()-style action that
-cannot short-circuit (``df.write.format("noop")`` keeps the whole plan).
-A warmup pass runs first so JVM/codegen startup is not attributed to q1.
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py
+
+Every headline query first runs once at sf0.001 (JVM startup and codegen
+stay out of the measured numbers), then three times at the measured sf
+in three interleaved passes, each pass in its own shuffled order. Each
+query is forced to full execution through ``df.write.format("noop")``,
+which keeps the whole plan. Per query the record keeps the median wall
+time and the median process-tree CPU (``profile._tree_cpu_seconds``).
+
+Two lines go to stdout: the full record, then a final line of at most
+``TAIL_LINE_BUDGET`` chars carrying the headline total and the most
+expensive queries' medians. The full record is also appended to
+``bench_history.jsonl``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import random
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from geektime_bigdata_spark import get_spark  # noqa: E402
+from geektime_bigdata_spark.profile import _tree_cpu_seconds  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 # Headline set: scan/agg throughput (q1), join pipelines (q3/q5/q9/q21),
@@ -24,13 +35,9 @@ import __spark_entry__ as entrymod  # noqa: E402
 # ANN operators so regressions in the expensive plans stay visible.
 # Keys must exist in __spark_entry__.queries().
 #
-# The set is VERSIONED (VERDICT r13 item 2): the record carries
-# `set`/`n`, so history totals are only comparable within a version,
-# while per-query bands splice across versions unchanged (bands are
-# per-query at the same sf; a new member simply seeds its band).
-# Mapping: v1 = the r5-r13 73-query set below; v2 (r14) = v1 +
-# HEADLINE_ADDED_V2. SPARK_GRAFT_BENCH_SET=v1 runs the old set for a
-# parallel splice record at a version boundary.
+# The set is versioned: the record carries `set`/`n`, so history totals
+# are only comparable within a version. v1 = the r5-r13 73-query set
+# below; each later version appends its HEADLINE_ADDED_V* list.
 HEADLINE_V1 = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -178,261 +185,16 @@ HEADLINE = (
 )
 
 
-def _resolve_headline_set() -> tuple[int, list[str]]:
-    """Resolve the headline membership for THIS run, reading the
-    SPARK_GRAFT_BENCH_SET override at call time from main() — not at
-    import (ADVICE r14: an exported =v1 mutated module state and made
-    an unrelated pytest assert fail spuriously; module constants now
-    stay pure). Unknown values fall through to the current set rather
-    than silently shrinking the measurement."""
-    v = os.environ.get("SPARK_GRAFT_BENCH_SET", "")
-    if v == "v1":
-        return 1, list(HEADLINE_V1)
-    if v == "v2":
-        return 2, HEADLINE_V1 + HEADLINE_ADDED_V2
-    if v == "v3":
-        return 3, HEADLINE_V1 + HEADLINE_ADDED_V2 + HEADLINE_ADDED_V3
-    if v == "v4":
-        return 4, (
-            HEADLINE_V1
-            + HEADLINE_ADDED_V2
-            + HEADLINE_ADDED_V3
-            + HEADLINE_ADDED_V4
-        )
-    return HEADLINE_SET_VERSION, list(HEADLINE)
+# the BENCH_r*.json snapshots keep the last 2000 chars of stdout and
+# parse the last line found there; a final line longer than that parses
+# as nothing (observed: BENCH_r05/r08 `parsed: {}`). Ten chars are left
+# for the trailing newline and slack in how the capture counts.
+TAIL_LINE_BUDGET = 1990
 
 
-def _run(df) -> int:
+def _run(df) -> None:
     # noop sink executes the complete plan without result materialization
     df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
-# compact-summary keys for every label _classify (or the <3-sample
-# "new" case) can emit; short forms keep the final stdout line inside
-# the driver's ~200-char tail capture even with every label present
-BAND_SHORT = {
-    "in_band": "in",
-    "above_band": "above",
-    "above_band_ambient": "above_amb",
-    "below_band": "below",
-    "below_band_ambient": "below_amb",
-    "new": "new",
-}
-
-# a run (or a history record) counts as ambient-drifted when its own
-# sched probe moved outside this window during the bench; the bounds
-# are multiplicatively symmetric (1/0.8 = 1.25 — the same ±25% factor
-# in either direction), matching how drift scales timings
-#
-# Residual observed r13 (promotion condition recorded then, PROMOTED
-# r14 — see SCHED_CURRENT_LO/HI): a boot whose LEVEL sits just inside
-# the window still moves timings — three same-code closing records on
-# a lvl 1.135/1.178/1.237 boot passed all three ambient axes yet read
-# 40-45/73 above_band each, totals ~1.31x the (itself fast, lvl 0.84)
-# r12 anchor. Scalar residual normalization was prototyped against
-# the full real history and REJECTED: the inflation is NON-uniform
-# per query (word_counts read 1.31-1.37x and ngram_jaccard_pairs
-# 1.43-1.50x their cross-boot normalized medians on all three records
-# while other queries read 0.8x), so dividing every timing by the
-# record's median shift still left 20-29/73 out-of-band at a ±20%
-# tolerance — no scalar restores comparability across boots with
-# different per-query-shape costs.
-SCHED_STEADY_LO = 0.8
-SCHED_STEADY_HI = 1.25
-
-# PROMOTED r14 (trigger fired: the r13 COMMITTED record itself sat at
-# lvl 1.267, and code-level adjudication was needed from that boot —
-# VERDICT r13 item 3 directed applying the documented condition): the
-# CURRENT run's level-vs-median ambient decision uses this tighter,
-# empirically separable window, so off-level boots yield only *_amb
-# labels — the honest reading; round-over-round claims rest on
-# same-level records, as the r12 per-query win audit already did in
-# practice. HISTORY admission (band construction and the level-pool
-# refinement) deliberately keeps the wider [SCHED_STEADY_LO,
-# SCHED_STEADY_HI]: bands need cross-boot mass, and a mildly-off
-# boot's timings are still informative as history even when a CLAIM
-# made on that boot is not.
-SCHED_CURRENT_LO = 0.91
-SCHED_CURRENT_HI = 1.10
-
-# third ambient axis (VERDICT r12 item 2 — the documented promotion
-# trigger fired): hypervisor steal DURING the measured window inflates
-# timings while every probe-based axis can pass — BENCH_r12's own
-# window read cal 1.128 with 42 CPU-s of steal (d_steal_j 4199) and 19
-# uniformly ~1.1-1.2x above-band labels, and two earlier records
-# passed both spread (1.004/1.001) and level (1.243/1.121) while
-# carrying d_steal_j 2655/9273. The axis is a RATE (steal jiffies per
-# wall-second of the measured window) so one bound serves both the
-# ~200s sf0.001 and ~300s sf0.1 windows. Empirical separation across
-# every steal-bearing history record (10 records, this boot family):
-# steal-quiet reads <= 2.7 j/s (max: 454 j over a 171 s window);
-# contaminated reads >= 8.6 j/s (min: the 2655 j record) — the 5.0
-# bound sits ~1.9x from each cluster. 5 j/s = 5% of ONE cpu stolen
-# (0.16% of the 32-cpu box) — tiny in throughput terms, but steal
-# lands on scheduling latency, which is exactly the quantity the r7
-# forensics showed drifts first.
-#
-# Documented blind spot (observed r14, promotion condition below): a
-# PRE-RUN quiet probe does not predict a quiet window — two closing
-# records launched only after a probed sub-2-j/s 120-second window
-# measured 95.9 and 83.4 j/s of steal DURING the run (steal arrives in
-# multi-minute bursts on this host). The axis still labels such
-# records honestly after the fact; what it cannot do is BUY a steady
-# record on a burst-heavy day. PROMOTE if a round is again left with
-# zero steal-quiet records after multiple watched attempts: add a
-# bounded whole-run retry (one re-run when the completed window read
-# above the bound, both records appended to history — the
-# scale_stress per-point retry policy at bench granularity, take-
-# second-not-take-better, never silently trusted). TRIGGER STATUS:
-# fired the same round it was documented (r14 ended with zero
-# steal-quiet records after 25 watched 120s probes spanning ~1.5h,
-# rates 1.8-77 j/s with only one sub-2 reading whose run was then
-# re-contaminated mid-flight) — but note the nuance for the r15
-# promotion: on a SUSTAINED-hostile day like this one a single
-# retry would also have been contaminated; the retry pays on
-# burst-days, so promote it as a cheap insurance, not a guarantee.
-# PROMOTED r15 (see main()): one bounded whole-run re-measure when the
-# completed window read above the bound, take-second-not-take-better,
-# both records in history, retry marked; alongside it the r15
-# steal-PROOF axes (per-query _tree_cpu_seconds medians +
-# value_level_norm) make adjudication possible even when both windows
-# are hostile.
-STEAL_AMBIENT_J_PER_SEC = 5.0
-
-# retry wall budget (r15): the whole-run retry is skipped when the
-# first measured window alone exceeded this, bounding worst-case bench
-# wall so an external per-invocation timeout truncates ONE record, not
-# both. 900s ~ 1.7x the slowest window observed on the r15 storm day
-# (529.8s, n=81 at sf0.1); a window beyond it means the day is lost to
-# wall measurement anyway and the steal-invariant cpu axis is the
-# record's adjudication surface.
-RETRY_WALL_BUDGET_S = 900.0
-
-# byte budget for the FINAL stdout line (r18): the driver's capture
-# keeps the last 2000 chars of stdout and parses the last line found
-# there — a final line longer than the capture parses as nothing
-# (observed: BENCH_r05/r08 `parsed: {}`). 1940 leaves room for the
-# `,"retry":1` suffix main() adds on the re-measure attempt plus the
-# trailing newline.
-TAIL_LINE_BUDGET = 1940
-
-
-def _steal_rate(cal) -> float | None:
-    """Steal jiffies per wall-second over the record's measured window,
-    or None when the record predates the host snapshot.
-
-    Wall prefers the recorded window length (host.wall, new in r13);
-    records that predate it fall back to sum(pass_totals), which
-    UNDERestimates the probe-to-probe window (it excludes the four
-    calibration probes) and therefore OVERestimates the rate —
-    conservative toward flagging a borderline old record, never toward
-    trusting it."""
-    host = cal.get("host", {})
-    steal = host.get("d_steal_j")
-    if steal is None:
-        return None
-    wall = host.get("wall")
-    if wall is None:
-        totals = cal.get("pass_totals")
-        if not totals:
-            return None
-        wall = sum(totals)
-    if wall <= 0:
-        return None
-    return steal / wall
-
-
-# the two WARM passes (2-3) drive every per-query median: pass 1
-# additionally pays the structural fill of the session memos and page
-# cache at the measured sf (the warmup phase runs at sf0.001), so a
-# per-query median of (inflated s1, s2, s3) resolves to max(s2, s3) —
-# measured r11: pass-1 totals run 1.18-1.24x the warm passes on same
-# code. When the warm totals disagree by more than this factor, the
-# two passes the medians rest on saw different machine states and the
-# record is ambient. Warm-pass noise on a steady box is a few percent
-# (73 queries summed per pass); r7-class drift inflates short queries
-# 1.7-1.9x, far above
-PASS_SPREAD_STEADY_HI = 1.15
-
-
-def _within_run_steady(cal) -> bool:
-    """Was the record's measured window internally steady?
-
-    Prefers the warm-pass-total spread when the record carries it: the
-    probes sit OUTSIDE the measured passes (pre right after the
-    73-query warmup burst, post right after the passes), so the sched
-    RATIO also reads the decay of the harness's own just-finished load
-    — observed r11: three same-code totals agreeing within 0.9% all
-    carried sched_ratio 0.65-0.79 (pre decay-inflated, post settled).
-    Flat warm totals mean the medians are trustworthy regardless of
-    what the surrounding probes read (the medians rest on the warm
-    passes — see PASS_SPREAD_STEADY_HI); a spread above the threshold
-    means the window the medians measure moved. Records that predate
-    pass totals fall back to the sched ratio; records that predate
-    both cannot be assessed and count as steady.
-
-    Third axis (promoted r13 — see STEAL_AMBIENT_J_PER_SEC): measured
-    hypervisor steal above the rate bound marks the window ambient
-    regardless of what the probes read, because steal confined to the
-    passes can leave spread ~1.0 and only half-move the level. Records
-    that predate the host snapshot skip the check.
-    """
-    rate = _steal_rate(cal)
-    if rate is not None and rate > STEAL_AMBIENT_J_PER_SEC:
-        return False
-    spread = cal.get("pass_spread")
-    if spread is not None:
-        return spread <= PASS_SPREAD_STEADY_HI
-    ratio = cal.get("sched_ratio")
-    if ratio is None:
-        return True
-    return SCHED_STEADY_LO <= ratio <= SCHED_STEADY_HI
-
-
-def _level_in_current_window(run_level: float, level_median: float) -> bool:
-    """CURRENT-run level gate (promoted r14): is this run's absolute
-    sched level close enough to the steady-history median for
-    out-of-band labels to be code signal? Tighter than history
-    admission (see SCHED_CURRENT_LO/HI vs SCHED_STEADY_LO/HI): a
-    mildly-off boot's timings still feed bands, but claims made ON
-    that boot get *_ambient labels."""
-    return (
-        SCHED_CURRENT_LO * level_median
-        <= run_level
-        <= SCHED_CURRENT_HI * level_median
-    )
-
-
-def _classify(t: float, past: list[float], ambient: bool):
-    """Band label for this run's median t against the sorted history.
-
-    Returns (label, p25, p75) using nearest-rank quartiles (robust for
-    the short n~10-60 series). An out-of-band label is only a code
-    signal on a run whose own measurement held steady: the r7
-    forensics showed sustained-load ambient drift moves timings while
-    the code is byte-identical — r9's 42-above_band scatter rode
-    sched_ratio 0.705. The caller sets ambient True when either axis
-    fired: the measured window itself moved (pass-total spread above
-    PASS_SPREAD_STEADY_HI, see _within_run_steady) or the run's
-    absolute probe level left the multiplicatively symmetric
-    [SCHED_STEADY_LO, SCHED_STEADY_HI] window (1/0.8 = 1.25) around
-    the steady-history median (see _steady_sched_median). With
-    ambient True, above_band re-labels above_band_ambient and
-    below_band re-labels below_band_ambient, so neither a regression
-    nor an improvement can be claimed off a drifted run (a fast
-    window reads below-band just as unreliably as a loaded one reads
-    above-band).
-    """
-    p25 = past[int(0.25 * (len(past) - 1))]
-    p75 = past[int(0.75 * (len(past) - 1))]
-    if p25 <= t <= p75:
-        label = "in_band"
-    elif t > p75:
-        label = "above_band_ambient" if ambient else "above_band"
-    else:
-        label = "below_band_ambient" if ambient else "below_band"
-    return label, p25, p75
 
 
 def _pass_drift(pass_totals: list[float]) -> tuple[float, float]:
@@ -444,9 +206,9 @@ def _pass_drift(pass_totals: list[float]) -> tuple[float, float]:
     resolves to max(s2, s3): pass-1 inflation can only nudge the
     median UP to the worse warm sample, never past either warm value
     — so the medians rest entirely on the warm passes and THEIR
-    agreement is the drift signal. warm_fill records
-    pass 1's structural overhang separately (measured 1.18-1.24x on
-    steady same-code runs).
+    agreement is the drift signal (above 1.15 the window moved; see
+    BASELINE.md). warm_fill records pass 1's structural overhang
+    separately (measured 1.18-1.24x on steady same-code runs).
     """
     warm = pass_totals[1:]
     spread = round(max(warm) / min(warm), 3)
@@ -454,281 +216,21 @@ def _pass_drift(pass_totals: list[float]) -> tuple[float, float]:
     return spread, fill
 
 
-def _sched_level(cal) -> float | None:
-    """Absolute sched-probe level of a record: mean of its pre/post
-    probe times, or None when the record predates the probe."""
-    pre, post = cal.get("sched_pre"), cal.get("sched_post")
-    if pre is None or post is None:
-        return None
-    return (pre + post) / 2.0
+def _measure(spark, queries, names: list[str], sf_dir: str) -> dict:
+    """Three interleaved shuffled passes over ``names``: per query the
+    median wall and process-tree CPU, plus each pass's wall total.
 
-
-def _host_snapshot() -> dict:
-    """Host contention diagnostics: loadavg and cumulative steal/iowait
-    jiffies. Recorded pre/post as evidence only — no classification
-    reads them. Motivation (r11): a same-code run read 15% high with
-    EVERY axis steady (probes normal, warm spread 1.08, level 0.93)
-    while the 5-min loadavg sat at 4.95 — contention that slows the
-    IO/memory-heavy measured passes can miss the short pure-CPU
-    probes entirely, and without a host snapshot in the record that
-    forensic is unrecoverable after the fact."""
-    snap = {}
-    try:
-        with open("/proc/loadavg") as fh:
-            parts = fh.read().split()
-        snap["load1"], snap["load5"] = float(parts[0]), float(parts[1])
-    except (OSError, ValueError, IndexError):
-        pass
-    try:
-        with open("/proc/stat") as fh:
-            cpu = fh.readline().split()
-        # cpu user nice system idle iowait irq softirq steal ...
-        snap["iowait_j"] = int(cpu[5])
-        if len(cpu) > 8:
-            snap["steal_j"] = int(cpu[8])
-    except (OSError, ValueError, IndexError):
-        pass
-    return snap
-
-
-def _tree_cpu_seconds() -> float | None:
-    """Total CPU seconds (utime+stime, plus reaped-child cutime/cstime)
-    consumed by THIS process and every live descendant — the Python
-    driver, the local[32] JVM it gatewayed, and the pyspark.daemon
-    worker pool. The steal-proof adjudication axis (VERDICT r14 item
-    2a): hypervisor steal freezes the guest's clocks from outside, so
-    stolen time never lands in any process's utime/stime — per-query
-    CPU deltas stay comparable across boots whose WALL readings differ
-    1.5x. Caveats, documented not hidden: jiffy (10 ms) resolution;
-    background JVM threads (GC, UI) attribute to whichever query is
-    running (wall has the same property); a short-lived worker that
-    dies between snapshots surfaces only via its reaper's cutime (the
-    default spark.python.worker.reuse keeps the pool stable); a
-    descendant ORPHANED to init between snapshots leaves the tree with
-    its time (its reaper is outside the tree), so a raw per-query delta
-    can come out negative — the sampler clamps those at 0. Returns
-    None when /proc is unreadable — the caller omits the cpu fields
-    rather than recording zeros."""
-    try:
-        hz = os.sysconf("SC_CLK_TCK")
-        entries = os.listdir("/proc")
-    except (OSError, ValueError):
-        return None
-    procs: dict[int, tuple[int, int]] = {}
-    for entry in entries:
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as fh:
-                data = fh.read()
-            # comm (field 2) may contain spaces/parens; fields after
-            # the LAST ')' are fixed: state ppid ... utime stime
-            # cutime cstime at rest-indexes 1, 11, 12, 13, 14
-            rest = data[data.rindex(")") + 2:].split()
-            procs[int(entry)] = (
-                int(rest[1]),
-                int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14]),
-            )
-        except (OSError, ValueError, IndexError):
-            continue  # pid exited mid-scan
-    tree = {os.getpid()}
-    grew = True
-    while grew:
-        grew = False
-        for pid, (ppid, _) in procs.items():
-            if ppid in tree and pid not in tree:
-                tree.add(pid)
-                grew = True
-    return sum(procs[p][1] for p in tree if p in procs) / hz
-
-
-def _steady_sched_median(lines, stats: dict | None = None) -> float | None:
-    """Median absolute sched-probe LEVEL across ratio-steady history
-    records, pooled over every sf (the probe is a fixed JVM job,
-    independent of the measured data, so all records calibrate the
-    same quantity).
-
-    The within-run ratio catches drift DURING a bench; it is blind to
-    a window where the box is uniformly slow for the whole run (ratio
-    ~1.0, every absolute number inflated — observed r11: a steady-
-    ratio record read 27% above its same-code sibling while its probe
-    LEVELS sat ~50% above every other record's, tracking an external
-    load spike that ended right after). The level median gives the
-    second axis: a run is only trustworthy when its probe both held
-    steady AND sat near the level steady runs historically occupy.
-
-    The within-run filter admits exactly the records the level axis
-    exists to catch (steady ratio, inflated level), so a run of slow
-    boots would drag the pooled median toward drifted levels and
-    weaken the filter over time (ADVICE r11). One refinement pass
-    fixes that as long as drifted records stay a minority (<50% of
-    steady-ratio history — the observed base rate is 1/16): take the
-    raw median, drop levels outside the [SCHED_STEADY_LO,
-    SCHED_STEADY_HI] window around it, and re-take the median over
-    the survivors. A majority-drifted history has no trustworthy
-    anchor at all; no pooled statistic can recover one.
-
-    With ``stats`` given (a dict), fills it with {"pooled", "kept"}
-    counts so the caller can surface how much of the pool the
-    refinement discarded — the anchor flips silently once drifted
-    records reach a majority, so an approaching-majority dropped
-    fraction must be visible in the record before that (ADVICE r12).
-    """
-    levels = []
-    for line in lines:
-        try:
-            row = json.loads(line)
-        except ValueError:
-            continue
-        cal = row.get("calibration", {})
-        if not _within_run_steady(cal):
-            continue
-        level = _sched_level(cal)
-        if level is not None:
-            levels.append(level)
-    if not levels:
-        if stats is not None:
-            stats.update(pooled=0, kept=0)
-        return None
-    levels.sort()
-    raw = levels[(len(levels) - 1) // 2]
-    kept = [
-        lv
-        for lv in levels
-        if SCHED_STEADY_LO * raw <= lv <= SCHED_STEADY_HI * raw
-    ]
-    if stats is not None:
-        stats.update(pooled=len(levels), kept=len(kept))
-    return kept[(len(kept) - 1) // 2]
-
-
-def _history_for_bands(
-    lines, sf_val, level_median: float | None = None
-) -> dict[str, list[float]]:
-    """Per-query timing history for band construction, from the raw
-    bench_history.jsonl lines at the matching sf.
-
-    Records whose OWN measured window was not steady (pass-total
-    spread above PASS_SPREAD_STEADY_HI; sched-ratio fallback for
-    records predating pass totals — see _within_run_steady) are
-    excluded: their timings measure the boot's ambient load, not the
-    code, and folding them into the p25-p75 bands widens every band
-    toward ambient scatter until above/below_band stops firing on
-    real changes (ADVICE r10). With level_median given, records whose
-    probe LEVEL sat outside the same multiplicative window around it
-    are excluded too — a steadily-slow window inflates every timing
-    without moving ratio or spread (see _steady_sched_median). Pre-r9
-    records that predate every probe are kept — they cannot be
-    assessed, and dropping them would empty most bands.
-    """
-    history: dict[str, list[float]] = {}
-    for line in lines:
-        try:
-            row = json.loads(line)
-        except ValueError:
-            continue
-        if row.get("sf") != sf_val:
-            continue
-        cal = row.get("calibration", {})
-        if not _within_run_steady(cal):
-            continue
-        level = _sched_level(cal)
-        if (
-            level_median is not None
-            and level is not None
-            and not (
-                SCHED_STEADY_LO * level_median
-                <= level
-                <= SCHED_STEADY_HI * level_median
-            )
-        ):
-            continue
-        for k, v in row.get("queries", {}).items():
-            history.setdefault(k, []).append(float(v))
-    return history
-
-
-def _calibrate(spark) -> float:
-    """Time a fixed JVM-side job (no IO, no Python) as an ambient
-    machine-speed probe. Run before and after the measured passes, it
-    answers 'did the box itself slow down during this bench?' — the
-    r6→r7 drift forensics showed same-code totals can step ~5-25% with
-    host CPU steal, so each record carries its own calibration pair."""
-    t0 = time.perf_counter()
-    # each term < 1e6 so the 2B-row sum stays far from long overflow
-    # (ANSI mode rejects overflowing aggregates); the raw multiply peaks
-    # at 2e9 * 2654435761 ~ 5.3e18, still inside int64
-    spark.range(2_000_000_000).selectExpr(
-        "sum((id * 2654435761) % 1000003) as s"
-    ).write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 3)
-
-
-def _calibrate_sched(spark) -> float:
-    """Time 16 trivial one-partition jobs: a probe of PER-JOB fixed
-    overhead (driver scheduling, task dispatch), the single-threaded
-    path. The r7 forensics found sustained-load drift inflates short
-    multi-stage queries ~1.7-1.9x while saturated-CPU throughput (the
-    _calibrate probe) stays flat — the drifting quantity is per-stage
-    overhead, so it gets its own probe."""
-    def one() -> None:
-        spark.range(1, numPartitions=1).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    for _ in range(2):  # untimed: absorb lingering GC from prior work
-        one()
-    t0 = time.perf_counter()
-    for _ in range(16):
-        one()
-    return round(time.perf_counter() - t0, 3)
-
-
-def _measure_once(
-    spark, queries, names, sf_dir: str, sf_val, set_version: int,
-    retry: bool = False,
-) -> tuple[dict, dict]:
-    """One full measured bench window (3 interleaved passes + probes),
-    returning (full record, compact summary). Extracted from main (r15)
-    so the promoted whole-run steal retry can re-measure without
-    duplicating the harness.
-
-    median-of-3 per query (VERDICT r2: several apparent regressions were
-    single-run noise; medians make the round-over-round <=2x bar
-    auditable while still absorbing transient scheduler/GC swings).
-
-    INTERLEAVED PASSES (VERDICT r6 item 3): the three samples per query
-    come from three full passes over the whole set, each pass in its own
-    deterministic shuffle order — not three consecutive runs. Ambient
-    machine drift within the bench (host contention, CPU steal — see
-    the r7 forensics in SURVEY §7.11) is time-correlated, so with
-    consecutive runs it lands entirely on whichever queries execute
-    late and reads as per-query regression; with each query sampled
-    early/mid/late, drift moves all medians uniformly and the band
-    classification stays attributable. Cache-warmness structure is
-    unchanged: pass 1 fills the session memos exactly as run 1 of 3
-    did, passes 2-3 run warm.
-
-    Alongside wall, each query records its process-tree CPU delta
-    (VERDICT r14 item 2a — see _tree_cpu_seconds): CPU is
-    steal-invariant, so the cpu medians adjudicate code changes across
-    boots whose wall readings are hostage to the hypervisor."""
-    import random
-
-    win_t0 = time.perf_counter()
-    host_pre = _host_snapshot()
-    cal_pre = _calibrate(spark)
-    sched_pre = _calibrate_sched(spark)
+    Each query is sampled early, mid and late in the window, so
+    time-correlated host drift moves all medians alike instead of
+    reading as a regression of whichever queries run last. Pass 1
+    fills the session memos; passes 2-3 run warm."""
     samples: dict[str, list[float]] = {n: [] for n in names}
     cpu_samples: dict[str, list[float]] = {n: [] for n in names}
     cpu_ok = _tree_cpu_seconds() is not None
     for pass_idx in range(3):
         order = list(names)
         random.Random(pass_idx).shuffle(order)
-        # one /proc-tree snapshot per QUERY BOUNDARY, not two per query:
-        # query N's post-snapshot is query N+1's pre-snapshot, halving
-        # the scan count (the scan is milliseconds, but it sits inside
-        # the measured window — cheaper is strictly better)
+        # query N's post-snapshot is query N+1's pre-snapshot
         c0 = _tree_cpu_seconds() if cpu_ok else None
         for name in order:
             t0 = time.perf_counter()
@@ -741,253 +243,63 @@ def _measure_once(
                     c0 = None
                 else:
                     # clamp at 0: a descendant orphaned to init between
-                    # snapshots (not reaped by a tree member, so its
-                    # time never lands in anyone's cutime) can make the
-                    # tree total DROP across a query — a negative delta
-                    # is that accounting artifact, never negative work
-                    # (ADVICE r15)
+                    # snapshots takes its time out of the tree, which
+                    # can make the total DROP across a query
                     cpu_samples[name].append(max(c1 - c0, 0.0))
                     c0 = c1
-    cal_post = _calibrate(spark)
-    sched_post = _calibrate_sched(spark)
-    host_post = _host_snapshot()
-    # wall length of the probe-to-probe window the host deltas span —
-    # the denominator of the steal-rate ambient axis (_steal_rate)
-    win_wall = round(time.perf_counter() - win_t0, 3)
     timings = {n: round(sorted(rs)[1], 3) for n, rs in samples.items()}
-    # each pass's total: the direct within-run drift signal (warm-pass
-    # spread + structural pass-1 overhang — see _pass_drift)
     pass_totals = [
         round(sum(samples[n][i] for n in names), 3) for i in range(3)
     ]
     pass_spread, warm_fill = _pass_drift(pass_totals)
-
-    total = round(sum(timings.values()), 3)
     record = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_val,
-        # headline-set version + size (VERDICT r13 item 2): totals are
-        # comparable only within a version; bands splice across
-        "set": set_version,
-        "n": len(timings),
-        # per-query historical p25-p75 band at this sf (VERDICT r4 item
-        # 7): cross-boot noise swings same-code totals up to ~30%, so a
-        # round-over-round delta is only SIGNAL when the new median
-        # leaves the band the query has historically occupied. "bands"
-        # carries {p25, p75, n} per query; "classification" labels this
-        # run's median in_band / above_band / below_band / new.
-        # "seeding" (VERDICT r5 item 5) lists queries whose band rests
-        # on fewer than 6 historical samples — an above/below_band on a
-        # seeding band is a thin-history artifact, not yet signal.
-        "bands": {},
-        "classification": {},
-        "seeding": [],
-        # fixed probes timed before/after the measured passes; ratio
-        # >> 1 means the machine slowed DURING the bench and above_band
-        # labels should be read against that, not as code. cpu = 2B-row
-        # saturated aggregate (parallel throughput); sched = 16 trivial
-        # one-partition jobs (per-job fixed overhead — the quantity the
-        # r7 forensics showed actually drifts under sustained load)
+        # the key bench_history.jsonl records have kept the pass fields
+        # under since those were added
         "calibration": {
-            "pre": cal_pre,
-            "post": cal_post,
-            "ratio": round(cal_post / cal_pre, 3),
-            "sched_pre": sched_pre,
-            "sched_post": sched_post,
-            "sched_ratio": round(sched_post / sched_pre, 3),
             "pass_totals": pass_totals,
             "pass_spread": pass_spread,
             "warm_fill": warm_fill,
-            # loadavg at each end plus steal/iowait jiffy DELTAS over
-            # the measured window; d_steal_j / wall is the third
-            # ambient axis (promoted r13 — see STEAL_AMBIENT_J_PER_SEC;
-            # iowait and loadavg remain diagnostics only)
-            "host": {
-                "pre": host_pre,
-                "post": host_post,
-                "wall": win_wall,
-                **{
-                    f"d_{k}": host_post[k] - host_pre[k]
-                    for k in ("steal_j", "iowait_j")
-                    if k in host_pre and k in host_post
-                },
-            },
         },
     }
-    # per-query process-tree CPU medians (VERDICT r14 item 2a): the
-    # steal-invariant twin of "queries". cpu_total is their sum — at
-    # local[32] expect cpu_total >> value (parallelism), and a code
-    # regression moves cpu where a hostile hypervisor cannot. Omitted
-    # entirely (never zero-filled) when /proc was unreadable or any
-    # query missed a sample.
+    # omitted, never zero-filled, when /proc was unreadable
     if cpu_ok and all(len(cpu_samples[n]) == 3 for n in names):
-        cpu_medians = {
-            n: round(sorted(cs)[1], 3) for n, cs in cpu_samples.items()
-        }
-        record["cpu"] = cpu_medians
-        record["cpu_total"] = round(sum(cpu_medians.values()), 3)
-    hist_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_history.jsonl"
-    )
-    try:
-        with open(hist_path) as fh:
-            hist_lines = fh.readlines()
-    except OSError:
-        hist_lines = []
-    pool_stats: dict = {}
-    level_median = _steady_sched_median(hist_lines, pool_stats)
-    history = _history_for_bands(hist_lines, sf_val, level_median)
-    run_level = _sched_level(record["calibration"])
-    # ambient on any of three axes: the measured window itself moved
-    # (pass-total spread — see _within_run_steady; the sched ratio is
-    # kept as a recorded diagnostic and the fallback for old records),
-    # the whole window ran slow/fast relative to where steady runs
-    # historically sit (level vs median) — a uniformly loaded window
-    # keeps spread ~1.0 while inflating every timing — or measured
-    # hypervisor steal exceeded the rate bound (promoted from the
-    # ADVICE-r11 "blind spot" diagnostics in r13 after its trigger
-    # fired: BENCH_r12's window carried 42 CPU-s of steal with 19
-    # uniform above-band labels, and two prior records passed spread
-    # AND level while carrying d_steal_j 2655/9273 — see
-    # STEAL_AMBIENT_J_PER_SEC for the empirical separation).
-    ambient = not _within_run_steady(record["calibration"])
-    if pool_stats.get("pooled"):
-        # refinement-pass visibility (ADVICE r12): the anchor flips
-        # silently once drifted levels reach a majority of the pool,
-        # so the record carries the discarded fraction and a stderr
-        # warning fires while drift is still a (large) minority
-        drop_frac = round(
-            1.0 - pool_stats["kept"] / pool_stats["pooled"], 3
-        )
-        record["calibration"]["level_pool"] = {
-            "pooled": pool_stats["pooled"],
-            "kept": pool_stats["kept"],
-            "drop_frac": drop_frac,
-        }
-        if drop_frac > 0.3:
-            print(
-                f"WARNING: level-median refinement discarded "
-                f"{drop_frac:.0%} of {pool_stats['pooled']} pooled "
-                "levels — drifted boots approaching majority; the "
-                "anchor flips to the drifted cluster at >=50%",
-                file=sys.stderr,
-            )
-    if level_median is not None:
-        record["calibration"]["sched_level_vs_median"] = round(
-            run_level / level_median, 3
-        )
-        # CURRENT-run decision uses the tighter window promoted r14
-        # (see SCHED_CURRENT_LO/HI); history admission above stays on
-        # the wide window
-        if not _level_in_current_window(run_level, level_median):
-            ambient = True
-        # level-normalized TOTAL (VERDICT r14 item 2b): value divided
-        # by this run's sched-level ratio — committed ALONGSIDE the raw
-        # value, never instead of it. Scope note: the r13 prototype
-        # showed no scalar restores PER-QUERY comparability (inflation
-        # is non-uniform), so bands stay raw; what the scalar does
-        # support is the cross-boot TOTAL reading the r14 verdict had
-        # to hand-compute (102.7/1.455 => ~70).
-        record["value_level_norm"] = round(
-            total / record["calibration"]["sched_level_vs_median"], 3
-        )
-    for name, t in timings.items():
-        past = sorted(history.get(name, []))
-        if len(past) < 6:
-            record["seeding"].append(name)
-        if len(past) < 3:
-            record["classification"][name] = "new"
-            continue
-        label, p25, p75 = _classify(t, past, ambient)
-        record["bands"][name] = {
-            "p25": round(p25, 3),
-            "p75": round(p75, 3),
-            "n": len(past),
-        }
-        record["classification"][name] = label
-    if retry:
-        # stamped BEFORE the history append so the historical record
-        # carries the marker too, not just the stdout lines
-        record["retry"] = 1
-    # per-query history for round-over-round regression tracking (the
-    # driver snapshots only the latest line as BENCH_r{N}.json)
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_history.jsonl"),
-            "a",
-        ) as fh:
-            core = {
-                k: v
-                for k, v in record.items()
-                if k not in ("bands", "classification")
-            }
-            fh.write(json.dumps({"ts": time.time(), **core}) + "\n")
-    except OSError:
-        pass  # history is best-effort; the contract is the stdout line
-    # compact (<200-byte) self-contained summary, printed LAST by the
-    # caller. The driver snapshots only the final ~200 chars of stdout
-    # into BENCH_r{N}.json; the full record is far larger, so its tail
-    # lands mid-JSON and the driver's "parsed" field came back null in
-    # r7/r8. This line fits the capture whole and carries the headline
-    # numbers; the full per-query record persists in bench_history.jsonl.
-    band_counts: dict[str, int] = {}
-    for label in record["classification"].values():
-        # .get: an unmapped future label degrades to its long form
-        # instead of a KeyError that would drop the compact tail line
-        # the driver snapshots (ADVICE r10)
-        label = BAND_SHORT.get(label, label)
-        band_counts[label] = band_counts.get(label, 0) + 1
-    # diagnostic keys are shortened or trimmed to hold the worst-case
-    # line under the ~200-byte tail budget with every feasible label
-    # present (re-audited r15 when vnorm/cpu/retry joined: unit, cal
-    # and lvl moved to the full record only — the run's level ratio is
-    # recoverable from the tail as value / vnorm — and seeding
-    # shortened to seed; full names live in bench_history.jsonl).
-    # vnorm/cpu print at 1 decimal here, 3 in the full record.
+        cpu = {n: round(sorted(cs)[1], 3) for n, cs in cpu_samples.items()}
+        record["cpu"] = cpu
+        record["cpu_total"] = round(sum(cpu.values()), 3)
+    return record
+
+
+def _final_line(record: dict) -> str:
+    """The last stdout line: headline numbers plus the medians of the
+    most expensive queries, added greedily until the line would exceed
+    TAIL_LINE_BUDGET. ``q_omitted`` counts the cheap tail left out; the
+    full map is in the record line and bench_history.jsonl."""
+    timings = record["queries"]
     compact = {
         "metric": record["metric"],
-        "value": total,
-        "sf": sf_val,
-        "set": set_version,
-        "n": len(timings),
-        "spread": pass_spread,
-        "bands": band_counts,
-        "seed": len(record["seeding"]),
+        "value": record["value"],
+        "sf": record["sf"],
+        "set": record["set"],
+        "n": record["n"],
+        "spread": record["calibration"]["pass_spread"],
     }
-    if "value_level_norm" in record:
-        compact["vnorm"] = round(record["value_level_norm"], 1)
     if "cpu_total" in record:
         compact["cpu"] = round(record["cpu_total"], 1)
-    # Fold per-query medians into the parse-guaranteed FINAL line
-    # (VERDICT r17 item 2): the driver parses only the last ~2000
-    # chars of stdout — BENCH_r05/r08 parsed NOTHING when the record
-    # line outgrew that tail, which is why the compact line exists —
-    # and the full 88-query map serializes to ~2.6 KB, physically
-    # larger than the capture. So the final line carries the medians
-    # of the MOST EXPENSIVE queries, greedily added until the line
-    # reaches TAIL_LINE_BUDGET; "q_omitted" counts the cheap tail left
-    # out (nothing is dropped from the measurement — the complete map
-    # is in the first-line full record and bench_history.jsonl). The
-    # budget leaves headroom for the retry marker main() may append.
     qmap: dict[str, float] = {}
     for name in sorted(timings, key=lambda n: (-timings[n], n)):
-        qmap[name] = timings[name]
-        trial = dict(compact)
-        trial["queries"] = qmap
-        trial["q_omitted"] = len(timings) - len(qmap)
-        if (
-            len(json.dumps(trial, separators=(",", ":")))
-            > TAIL_LINE_BUDGET
-        ):
+        qmap[name] = round(timings[name], 2)
+        trial = {**compact, "queries": qmap,
+                 "q_omitted": len(timings) - len(qmap)}
+        if len(json.dumps(trial, separators=(",", ":"))) > TAIL_LINE_BUDGET:
             del qmap[name]
             break
     compact["queries"] = qmap
     compact["q_omitted"] = len(timings) - len(qmap)
-    return record, compact
+    return json.dumps(compact, separators=(",", ":"))
 
 
 def main() -> None:
@@ -997,66 +309,33 @@ def main() -> None:
     spark = get_spark(app_name="gbs-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    set_version, headline = _resolve_headline_set()
-    names = [n for n in headline if n in queries]
+    names = [n for n in HEADLINE if n in queries]
 
-    # warmup: run every headline query once at the smallest scale factor so
-    # JVM startup + whole-stage-codegen compilation of each query's
-    # operator pipeline is not attributed to the measured sf run. The
-    # warmup data (~6k lineitem rows) is negligible next to the measured
-    # scale, so this isolates steady-state engine throughput.
+    # warmup at the smallest scale factor: JVM startup and each query's
+    # whole-stage codegen stay out of the measured sf run
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
     for name in names:
         _run(queries[name](spark, warm_dir))
 
-    # Whole-run steal retry — PROMOTED r15 (the condition documented
-    # next to STEAL_AMBIENT_J_PER_SEC fired in r14: zero steal-quiet
-    # records after 25 watched 120s probes). When the COMPLETED window
-    # measured steal above the rate bound, re-measure ONCE and commit
-    # the second record — take-second-not-take-better, the scale_stress
-    # per-point policy at bench granularity: both records print in full
-    # and append to history; the retry is marked and is the one the
-    # driver's tail capture sees. On a sustained-hostile day the retry
-    # is also contaminated (r14's would have been) — it pays on
-    # BURST-days, insurance not guarantee. The steal-proof adjudication
-    # axes (per-query cpu medians, value_level_norm) ride every record
-    # either way. SPARK_GRAFT_BENCH_RETRY=0 disables (watched-probe
-    # launchers that manage their own retries).
-    retry_enabled = os.environ.get("SPARK_GRAFT_BENCH_RETRY") != "0"
-    for attempt in range(2):
-        # guard below: the retry roughly doubles total bench wall (one
-        # more full measured window on the warm session). Observed r15
-        # windows read 414-530s at sf0.1 (n=77/81); the budget skips
-        # the retry only when the FIRST window already ran
-        # pathologically long, so a host-side bench timeout truncates
-        # a record instead of losing both.
-        record, compact = _measure_once(
-            spark, queries, names, sf_dir, sf_val, set_version,
-            retry=attempt == 1,
-        )
-        if attempt == 1:
-            compact["retry"] = 1
-        print(json.dumps(record))
-        rate = _steal_rate(record["calibration"])
-        if (
-            attempt == 0
-            and retry_enabled
-            and rate is not None
-            and rate > STEAL_AMBIENT_J_PER_SEC
-            and record["calibration"]["host"].get("wall", 0)
-            <= RETRY_WALL_BUDGET_S
-        ):
-            print(
-                f"steal {rate:.1f} j/s > {STEAL_AMBIENT_J_PER_SEC} during"
-                " the measured window — re-measuring once"
-                " (take-second-not-take-better)",
-                file=sys.stderr,
-            )
-            continue
-        print(json.dumps(compact, separators=(",", ":")))
-        break
+    record = {
+        **_measure(spark, queries, names, sf_dir),
+        "sf": sf_val,
+        "set": HEADLINE_SET_VERSION,
+        "n": len(names),
+    }
+    try:
+        with open(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "bench_history.jsonl"),
+            "a",
+        ) as fh:
+            fh.write(json.dumps({"ts": time.time(), **record}) + "\n")
+    except OSError:
+        pass  # history is best-effort; the contract is the stdout line
+    print(json.dumps(record))
+    print(_final_line(record))
     # drop the shared operator caches so a host embedding this bench in a
     # longer session does not keep the sf-scale relations pinned
     from geektime_bigdata_spark.session import release_caches

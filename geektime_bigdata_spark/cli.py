@@ -66,7 +66,9 @@ def main(argv: list[str] | None = None) -> int:
     p_exp.add_argument("name")
     _add_sf_dir(p_exp)
 
-    sub.add_parser("bench", help="run the headline bench (one JSON line)")
+    sub.add_parser(
+        "bench", help="run the headline bench (record line, then summary line)"
+    )
 
     p_prof = sub.add_parser(
         "profile", help="profile queries warm: one JSON record per query"
@@ -149,8 +151,7 @@ def main(argv: list[str] | None = None) -> int:
 def _profile(spark, queries, names, sf_dir, reps) -> None:
     import json
 
-    from bench import _tree_cpu_seconds
-    from geektime_bigdata_spark.profile import profile
+    from geektime_bigdata_spark.profile import _tree_cpu_seconds, profile
 
     for name in names:
         walls, cpus = [], []

@@ -14,9 +14,14 @@ record of the Spark work submitted meanwhile:
   already evicted (``spark.ui.retainedStages``) are counted, not summed.
 - **plan nodes**: for every SQL execution started in the window, each
   plan-graph node with its metric values from the SQL status store.
+
+``_tree_cpu_seconds()`` reads the process-tree CPU that ``bench.py``
+and the ``profile`` CLI verb take per-query deltas of.
 """
 
 from __future__ import annotations
+
+import os
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
@@ -114,3 +119,53 @@ def profile(spark: SparkSession, run) -> dict:
         "stage_rows": rows,
         "executions": _executions_after(sql_store, last_execution),
     }
+
+
+def _tree_cpu_seconds() -> float | None:
+    """Total CPU seconds (utime+stime, plus reaped-child cutime/cstime)
+    consumed by THIS process and every live descendant — the Python
+    process, the local JVM it gatewayed, and the pyspark.daemon worker
+    pool. Hypervisor steal freezes the guest's clocks from outside, so
+    stolen time never lands in any process's utime/stime: per-query CPU
+    deltas stay comparable across hosts whose WALL readings differ 1.5x.
+    Caveats: jiffy (10 ms) resolution; background JVM threads (GC, UI)
+    attribute to whichever query is running (wall has the same
+    property); a short-lived worker that dies between snapshots
+    surfaces only via its reaper's cutime (the default
+    spark.python.worker.reuse keeps the pool stable); a descendant
+    ORPHANED to init between snapshots leaves the tree with its time
+    (its reaper is outside the tree), so a raw delta can come out
+    negative — callers clamp those at 0. Returns None when /proc is
+    unreadable — callers omit the cpu fields rather than recording
+    zeros."""
+    try:
+        hz = os.sysconf("SC_CLK_TCK")
+        entries = os.listdir("/proc")
+    except (OSError, ValueError):
+        return None
+    procs: dict[int, tuple[int, int]] = {}
+    for entry in entries:
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                data = fh.read()
+            # comm (field 2) may contain spaces/parens; fields after
+            # the LAST ')' are fixed: state ppid ... utime stime
+            # cutime cstime at rest-indexes 1, 11, 12, 13, 14
+            rest = data[data.rindex(")") + 2:].split()
+            procs[int(entry)] = (
+                int(rest[1]),
+                int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14]),
+            )
+        except (OSError, ValueError, IndexError):
+            continue  # pid exited mid-scan
+    tree = {os.getpid()}
+    grew = True
+    while grew:
+        grew = False
+        for pid, (ppid, _) in procs.items():
+            if ppid in tree and pid not in tree:
+                tree.add(pid)
+                grew = True
+    return sum(procs[p][1] for p in tree if p in procs) / hz

@@ -1,12 +1,10 @@
-"""Pin the round-10 harness hardening: bench band labeling (ambient
-re-label + compact-line budget) and the scale_stress probe-mode guards.
+"""Pin the bench harness's stdout contract and the scale_stress
+probe-mode guards.
 
-These are driver-contract surfaces, not operators: bench.py's final
-stdout line is what the driver snapshots into BENCH_r{N}.json, and
-scale_stress's guards protect SCALING.json's evidentiary integrity
-(VERDICT r9 items 3/5, ADVICE r9). No SparkSession is needed — the
-classification helper is pure, and every guard exits before the JVM
-would boot.
+bench.py's final stdout line is what the BENCH_r*.json snapshots parse,
+and scale_stress's guards protect SCALING.json's evidentiary integrity.
+No SparkSession is needed: the bench helpers are pure, and every
+scale_stress guard exits before the JVM would boot.
 """
 
 from __future__ import annotations
@@ -22,130 +20,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 import bench  # noqa: E402
-
-
-HISTORY = sorted([1.0, 1.1, 1.2, 1.3, 1.4, 1.5, 1.6, 1.7, 1.8, 1.9])
-
-
-def test_in_band_ignores_ambient():
-    for ambient in (False, True):
-        label, p25, p75 = bench._classify(1.5, HISTORY, ambient)
-        assert label == "in_band"
-        assert p25 <= 1.5 <= p75
-
-
-def test_above_band_relabels_only_when_ambient():
-    label, _, p75 = bench._classify(9.9, HISTORY, ambient=False)
-    assert label == "above_band"
-    assert 9.9 > p75
-    label, _, _ = bench._classify(9.9, HISTORY, ambient=True)
-    assert label == "above_band_ambient"
-
-
-def test_below_band_relabels_only_when_ambient():
-    # symmetric with above_band (ADVICE r10): a below_band median on a
-    # drifted-FAST boot is equally unreliable and must not read as a
-    # perf win
-    label, p25, _ = bench._classify(0.5, HISTORY, ambient=False)
-    assert label == "below_band"
-    assert 0.5 < p25
-    label, _, _ = bench._classify(0.5, HISTORY, ambient=True)
-    assert label == "below_band_ambient"
-
-
-def test_history_for_bands_filters_drifted_records():
-    """A history record whose own sched probe drifted must not move the
-    band; legacy records without the probe are kept (VERDICT r10 item
-    3). The steady window is inclusive at both multiplicatively
-    symmetric bounds (1/0.8 = 1.25)."""
-    def rec(q, sched=None, sf=0.1):
-        row = {"sf": sf, "queries": {"q": q}}
-        if sched is not None:
-            row["calibration"] = {"sched_ratio": sched}
-        return json.dumps(row)
-
-    lines = [
-        rec(1.0, sched=1.0),       # steady: kept
-        rec(50.0, sched=0.5),      # drifted fast boot: excluded
-        rec(60.0, sched=1.7),      # drifted slow boot: excluded
-        rec(1.2),                  # pre-probe legacy record: kept
-        rec(0.9, sched=0.8),       # boundary lo, inclusive: kept
-        rec(1.1, sched=1.25),      # boundary hi, inclusive: kept
-        rec(99.0, sched=1.0, sf=0.01),  # other sf: excluded
-        "not json",                # corrupt line: skipped
-    ]
-    history = bench._history_for_bands(lines, 0.1)
-    assert history == {"q": [1.0, 1.2, 0.9, 1.1]}
-
-
-def test_band_short_covers_every_emittable_label():
-    emittable = {
-        bench._classify(t, HISTORY, amb)[0]
-        for t in (0.5, 1.5, 9.9)
-        for amb in (False, True)
-    } | {"new"}  # the <3-sample case assigned outside _classify
-    assert emittable <= set(bench.BAND_SHORT)
-
-
-@pytest.mark.parametrize(
-    "labels",
-    [
-        # ambient is decided once per RUN, so a single record can only
-        # mix one of the two out-of-band families with in/new: the
-        # steady set or the ambient set — never all six labels at once
-        ["in_band", "above_band", "below_band", "new"],
-        ["in_band", "above_band_ambient", "below_band_ambient", "new"],
-    ],
-)
-def test_compact_summary_fits_tail_capture_with_all_labels(labels):
-    # worst case per feasible set: every label present, max-width
-    # values, full seeding, the r15 steal-proof keys (vnorm/cpu at
-    # their 1-decimal compact precision) AND the retry marker
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": 9999.999,
-            "sf": 0.1,
-            "set": 3,
-            "n": 81,
-            "spread": 9.999,
-            "bands": {bench.BAND_SHORT[k]: 81 for k in labels},
-            "seed": 81,
-            "vnorm": 9999.9,
-            "cpu": 99999.9,
-            "retry": 1,
-        },
-        separators=(",", ":"),
-    )
-    assert len(line) < 200
-
-
-def _hist_rec(q=None, sched=None, levels=None, spread=None, sf=0.1):
-    row = {"sf": sf, "queries": {"q": q} if q is not None else {}}
-    cal = {}
-    if sched is not None:
-        cal["sched_ratio"] = sched
-    if levels is not None:
-        cal["sched_pre"], cal["sched_post"] = levels
-    if spread is not None:
-        cal["pass_spread"] = spread
-    if cal:
-        row["calibration"] = cal
-    return json.dumps(row)
-
-
-def test_within_run_steady_prefers_pass_spread_over_ratio():
-    """Flat pass totals override a decayed probe ratio (the probes sit
-    outside the measured window): three r11 same-code totals within
-    0.9% all carried sched_ratio 0.65-0.79. Conversely a moved window
-    is ambient even with a steady ratio; legacy records fall back."""
-    steady_spread_decayed_ratio = {"pass_spread": 1.02, "sched_ratio": 0.65}
-    assert bench._within_run_steady(steady_spread_decayed_ratio)
-    moved_window_steady_ratio = {"pass_spread": 1.3, "sched_ratio": 1.0}
-    assert not bench._within_run_steady(moved_window_steady_ratio)
-    assert bench._within_run_steady({"sched_ratio": 1.0})
-    assert not bench._within_run_steady({"sched_ratio": 0.5})
-    assert bench._within_run_steady({})  # pre-probe legacy record
+from geektime_bigdata_spark.profile import _tree_cpu_seconds  # noqa: E402
 
 
 def test_pass_drift_uses_warm_passes_only():
@@ -160,169 +35,6 @@ def test_pass_drift_uses_warm_passes_only():
     # drift between the warm passes IS flagged
     spread, _ = bench._pass_drift([60.0, 50.0, 65.0])
     assert spread == 1.3
-
-
-def test_history_for_bands_keeps_flat_pass_decayed_ratio_records():
-    lines = [
-        _hist_rec(q=1.0, sched=1.0, levels=(0.20, 0.22)),
-        # decayed ratio but flat passes: the r11 false-ambient case —
-        # kept now that the spread is the within-run axis
-        _hist_rec(q=1.1, sched=0.65, levels=(0.25, 0.17), spread=1.01),
-        # moved window, steady ratio: excluded
-        _hist_rec(q=5.0, sched=1.0, levels=(0.20, 0.21), spread=1.4),
-    ]
-    median = bench._steady_sched_median(lines)
-    assert bench._history_for_bands(lines, 0.1, median) == {
-        "q": [1.0, 1.1]
-    }
-
-
-def test_steady_sched_median_pools_only_ratio_steady_records():
-    lines = [
-        _hist_rec(sched=1.0, levels=(0.20, 0.22)),   # level 0.21
-        _hist_rec(sched=0.9, levels=(0.24, 0.26), sf=0.001),  # pooled
-        _hist_rec(sched=0.5, levels=(0.40, 0.40)),   # ratio-drifted: out
-        _hist_rec(sched=1.0),                        # pre-level record
-        "junk",
-    ]
-    assert bench._steady_sched_median(lines) == pytest.approx(0.21)
-    assert bench._steady_sched_median([_hist_rec(sched=0.5)]) is None
-
-
-def test_steady_sched_median_refinement_drops_drifted_levels():
-    """Uniformly-slow boots keep a steady ratio, so their inflated
-    levels pass the within-run filter and pool into the raw median —
-    exactly what the level axis exists to catch (ADVICE r11). The
-    refinement pass (raw median -> drop levels outside the steady
-    window around it -> re-median) keeps the anchor on the steady
-    cluster as long as drifted records stay a minority."""
-    steady = [
-        _hist_rec(sched=1.0, levels=(lv, lv))
-        for lv in (0.19, 0.20, 0.21, 0.22)
-    ]
-    assert bench._steady_sched_median(steady) == pytest.approx(0.20)
-    # three slow-boot records: raw median moves to 0.22 (the steady
-    # cluster's top edge); the refinement re-anchors at 0.20
-    drifted = [
-        _hist_rec(sched=1.0, levels=(lv, lv)) for lv in (0.38, 0.39, 0.40)
-    ]
-    assert bench._steady_sched_median(steady + drifted) == pytest.approx(
-        0.20
-    )
-
-
-def test_history_for_bands_filters_level_elevated_records():
-    """A ratio-steady record taken in a uniformly slow window (probe
-    LEVEL far above the steady median) must not move the band — the
-    r11 observation: same code, sched_ratio 1.026, but probe levels
-    ~1.6x the steady median and the total 27% high."""
-    lines = [
-        _hist_rec(q=1.0, sched=1.0, levels=(0.20, 0.22)),
-        _hist_rec(q=1.3, sched=1.026, levels=(0.38, 0.39)),  # slow window
-        _hist_rec(q=0.9, sched=1.0, levels=(0.19, 0.21)),
-        _hist_rec(q=1.1, sched=1.0),  # pre-level record: kept
-    ]
-    median = bench._steady_sched_median(lines)
-    history = bench._history_for_bands(lines, 0.1, median)
-    assert history == {"q": [1.0, 0.9, 1.1]}
-    # without a median (no level history) the level filter is inert
-    assert bench._history_for_bands(lines, 0.1) == {
-        "q": [1.0, 1.3, 0.9, 1.1]
-    }
-
-
-def test_steal_rate_prefers_recorded_wall_over_pass_totals():
-    """New records carry the probe-to-probe window length (host.wall);
-    older steal-bearing records fall back to sum(pass_totals), which
-    underestimates the window and so overestimates the rate —
-    conservative toward flagging, never toward trusting."""
-    cal = {
-        "pass_totals": [100.0, 90.0, 90.0],
-        "host": {"d_steal_j": 560, "wall": 400.0},
-    }
-    assert bench._steal_rate(cal) == pytest.approx(1.4)
-    del cal["host"]["wall"]
-    assert bench._steal_rate(cal) == pytest.approx(2.0)
-    assert bench._steal_rate({"host": {}}) is None  # no steal delta
-    assert bench._steal_rate({}) is None  # pre-host legacy record
-    # steal but neither wall nor pass totals: unassessable
-    assert bench._steal_rate({"host": {"d_steal_j": 99}}) is None
-
-
-def test_within_run_steady_flags_steal_contaminated_window():
-    """The promoted third axis (VERDICT r12 item 2): the two real
-    history records that passed BOTH the spread and level axes while
-    hypervisor steal inflated their timings — d_steal_j 2655 (spread
-    1.004, lvl 1.243) and 9273 (spread 1.001, lvl 1.121) — must read
-    ambient on steal rate alone; the steal-quiet closing records
-    (d_steal_j 66-107 over similar windows) stay steady."""
-    contaminated = {
-        "pass_spread": 1.004,
-        "pass_totals": [100.661, 88.445, 88.065],
-        "host": {"d_steal_j": 2655},
-    }
-    assert not bench._within_run_steady(contaminated)
-    contaminated_2 = {
-        "pass_spread": 1.001,
-        "pass_totals": [124.123, 75.977, 76.085],
-        "host": {"d_steal_j": 9273},
-    }
-    assert not bench._within_run_steady(contaminated_2)
-    quiet = {
-        "pass_spread": 1.005,
-        "pass_totals": [79.567, 66.608, 66.928],
-        "host": {"d_steal_j": 66},
-    }
-    assert bench._within_run_steady(quiet)
-    # steal quiet but spread moved: still ambient (axes compose)
-    assert not bench._within_run_steady(
-        {"pass_spread": 1.3, "host": {"d_steal_j": 0}, "pass_totals": [1.0]}
-    )
-    # records predating the host snapshot skip the steal check
-    assert bench._within_run_steady({"pass_spread": 1.01})
-
-
-def test_history_for_bands_filters_steal_contaminated_records():
-    def rec(q, steal, totals):
-        return json.dumps(
-            {
-                "sf": 0.1,
-                "queries": {"q": q},
-                "calibration": {
-                    "pass_spread": 1.004,
-                    "pass_totals": totals,
-                    "host": {"d_steal_j": steal, "wall": sum(totals)},
-                },
-            }
-        )
-
-    lines = [
-        rec(1.0, 100, [90.0, 80.0, 80.0]),     # quiet: kept
-        rec(1.3, 2655, [100.0, 88.0, 88.0]),   # contaminated: excluded
-        rec(0.9, 454, [60.0, 57.0, 54.0]),     # quiet: kept
-    ]
-    assert bench._history_for_bands(lines, 0.1) == {"q": [1.0, 0.9]}
-
-
-def test_steady_sched_median_reports_pool_stats():
-    """ADVICE r12: the refinement pass must surface how much of the
-    pool it discarded — the caller records pooled/kept and warns as
-    drift approaches the majority flip."""
-    steady = [
-        _hist_rec(sched=1.0, levels=(lv, lv))
-        for lv in (0.19, 0.20, 0.21, 0.22)
-    ]
-    drifted = [
-        _hist_rec(sched=1.0, levels=(lv, lv)) for lv in (0.38, 0.39)
-    ]
-    stats: dict = {}
-    assert bench._steady_sched_median(
-        steady + drifted, stats
-    ) == pytest.approx(0.20)
-    assert stats == {"pooled": 6, "kept": 4}
-    stats = {}
-    assert bench._steady_sched_median([], stats) is None
-    assert stats == {"pooled": 0, "kept": 0}
 
 
 def _scale_stress_module():
@@ -466,147 +178,71 @@ def test_headline_set_versioning():
     assert not missing, f"headline names not in queries(): {missing}"
 
 
-def test_headline_set_resolver_reads_env_at_call_time(monkeypatch):
-    """The SPARK_GRAFT_BENCH_SET override is resolved inside main()
-    (ADVICE r14: the import-time mutation made this suite fail
-    spuriously under an exported =v1): module constants stay pure, each
-    splice version returns its exact historical membership, and an
-    unknown value falls through to the current set instead of silently
-    shrinking the measurement."""
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_SET", raising=False)
-    assert bench._resolve_headline_set() == (5, bench.HEADLINE)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SET", "v1")
-    assert bench._resolve_headline_set() == (1, bench.HEADLINE_V1)
-    assert bench.HEADLINE_SET_VERSION == 5  # module state untouched
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SET", "v2")
-    assert bench._resolve_headline_set() == (
-        2,
-        bench.HEADLINE_V1 + bench.HEADLINE_ADDED_V2,
-    )
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SET", "v3")
-    assert bench._resolve_headline_set() == (
-        3,
-        bench.HEADLINE_V1 + bench.HEADLINE_ADDED_V2 + bench.HEADLINE_ADDED_V3,
-    )
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SET", "v4")
-    assert bench._resolve_headline_set() == (
-        4,
-        bench.HEADLINE_V1
-        + bench.HEADLINE_ADDED_V2
-        + bench.HEADLINE_ADDED_V3
-        + bench.HEADLINE_ADDED_V4,
-    )
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SET", "v9")
-    assert bench._resolve_headline_set() == (5, bench.HEADLINE)
-
-
-def test_current_level_window_nests_inside_history_admission():
-    """The r14-promoted CURRENT-run gate must be strictly tighter than
-    history admission: a run can be history-admissible yet yield only
-    *_ambient labels, never the reverse."""
-    assert bench.SCHED_STEADY_LO < bench.SCHED_CURRENT_LO
-    assert bench.SCHED_CURRENT_HI < bench.SCHED_STEADY_HI
-    assert bench.SCHED_CURRENT_LO < 1.0 < bench.SCHED_CURRENT_HI
-
-
-def test_current_level_window_flags_the_r13_boot():
-    """Replay the promotion trigger: the r13 closing records read lvl
-    1.135/1.178/1.237 — inside history admission (their timings feed
-    bands) but outside the current-run window (claims on that boot
-    must read ambient). A steady-history-typical level passes."""
-    for lvl in (1.135, 1.178, 1.237, 1.267):
-        assert not bench._level_in_current_window(lvl, 1.0)
-        # 1.267 was outside even the wide window; the rest are the
-        # formally-steady slow-boot records the tighter gate exists for
-    for lvl in (0.95, 1.0, 1.09):
-        assert bench._level_in_current_window(lvl, 1.0)
-    # history admission unchanged: the 1.2-level record stays in bands
-    line = json.dumps(
-        {
-            "sf": 0.1,
-            "queries": {"q": 1.0},
-            "calibration": {
-                "pass_totals": [12.0, 10.0, 10.1],
-                "pass_spread": 1.01,
-                "sched_pre": 1.2,
-                "sched_post": 1.2,
-            },
-        }
-    )
-    hist = bench._history_for_bands([line], 0.1, level_median=1.0)
-    assert hist == {"q": [1.0]}
-
-
 def test_tree_cpu_seconds_counts_own_burn():
     """_tree_cpu_seconds must return a positive, monotone reading that
     registers CPU this process burns: ~0.3s of spin moves the tree
     total by at least 0.1s (jiffy granularity is 10ms, so the check has
     30x headroom) and never by more than the elapsed wall times the
     core count."""
-    t0 = bench._tree_cpu_seconds()
+    t0 = _tree_cpu_seconds()
     assert t0 is not None and t0 > 0
     import time as _t
 
     spin_until = _t.process_time() + 0.3
     while _t.process_time() < spin_until:
         pass
-    t1 = bench._tree_cpu_seconds()
+    t1 = _tree_cpu_seconds()
     assert t1 is not None
     assert t1 - t0 >= 0.1, (t0, t1)
 
 
-def test_retry_wall_budget_covers_observed_windows():
-    """The retry budget must admit every window length observed on the
-    r15 storm day (414-530s) with headroom, and stay under twice a
-    plausible external bench timeout so a retried run cannot exceed
-    ~2x budget + warmup."""
-    assert bench.RETRY_WALL_BUDGET_S >= 1.5 * 530
-    assert bench.RETRY_WALL_BUDGET_S <= 1800
+def _assert_final_line(record: dict) -> dict:
+    """bench's own final line for ``record``: inside the 2000-char
+    stdout tail the BENCH_r*.json snapshots keep, valid JSON with the headline keys, and its
+    query medians a prefix of the cost-descending order."""
+    line = bench._final_line(record)
+    assert len(line) < 2000, len(line)
+    parsed = json.loads(line)
+    assert parsed["metric"] == "headline_queries_total"
+    for key in ("value", "n", "cpu"):
+        assert isinstance(parsed[key], (int, float)), key
+    timings = record["queries"]
+    order = sorted(timings, key=lambda n: (-timings[n], n))
+    kept = list(parsed["queries"])
+    assert kept == order[: len(kept)]
+    assert parsed["q_omitted"] == len(timings) - len(kept)
+    return parsed
 
 
 def test_compact_line_query_foldin_respects_tail_budget():
-    """r18: the final stdout line carries the most expensive queries'
-    medians but must stay inside the driver's 2000-char tail capture
-    (with headroom for the retry marker) — simulate the fold-in on a
-    worst-case 88-query map with long names."""
+    """Worst case: 88 long names, max-width headline values."""
     timings = {
         f"prefix_filter_jaccard_pairs_variant_{i:02d}": round(
             100.0 - i * 0.5, 3
         )
         for i in range(88)
     }
-    compact = {
+    record = {
         "metric": "headline_queries_total",
         "value": 9999.999,
         "sf": 0.1,
         "set": 5,
         "n": 88,
-        "spread": 9.999,
-        "bands": {"in": 18, "above_amb": 35, "below_amb": 20, "new": 15},
-        "seed": 15,
-        "vnorm": 9999.9,
-        "cpu": 99999.9,
+        "queries": timings,
+        "calibration": {"pass_spread": 9.999},
+        "cpu_total": 99999.999,
     }
-    qmap = {}
-    for name in sorted(timings, key=lambda n: (-timings[n], n)):
-        qmap[name] = timings[name]
-        trial = dict(compact)
-        trial["queries"] = qmap
-        trial["q_omitted"] = len(timings) - len(qmap)
-        if (
-            len(json.dumps(trial, separators=(",", ":")))
-            > bench.TAIL_LINE_BUDGET
-        ):
-            del qmap[name]
-            break
-    compact["queries"] = qmap
-    compact["q_omitted"] = len(timings) - len(qmap)
-    compact["retry"] = 1
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) < 2000
-    # the fold-in keeps the MOST expensive queries: the included set
-    # must be a prefix of the cost-descending order
-    kept = set(qmap)
-    order = sorted(timings, key=lambda n: (-timings[n], n))
-    assert kept == set(order[: len(kept)])
-    assert len(kept) >= 30  # meaningful coverage, not a token few
+    parsed = _assert_final_line(record)
+    assert len(parsed["queries"]) >= 30  # meaningful coverage
+
+
+def test_final_line_on_last_set5_history_record():
+    """The last set-5 record in bench_history.jsonl: with 2-decimal
+    medians on the final line, at most 23 of its 88 queries are left
+    off."""
+    with open(os.path.join(HERE, "bench_history.jsonl")) as fh:
+        rows = [json.loads(line) for line in fh if line.strip()]
+    record = [r for r in rows if r.get("set") == 5][-1]
+    parsed = _assert_final_line(record)
+    assert parsed["n"] == 88
+    assert parsed["q_omitted"] <= 23, parsed["q_omitted"]
