@@ -14,9 +14,12 @@ deterministic so a DuckDB oracle can verify them bit-for-bit:
                distinct values (pigeonhole-complete at hamming <= 3).
 - n-gram Jaccard: exact shingle-set similarity via posting-list pair
                expansion — quadratic only within shared-shingle groups.
-- clusters:    connected components over the near-dup graph (size-gated:
-               driver union-find for small edge sets, distributed label
-               propagation above the threshold).
+- graph:       connected components, PageRank, k-core, reachability and
+               random walks over the near-dup graph. Every graph op reads
+               one cached edge relation (:func:`_dup_edges`) and sizes it
+               through one bounded gate (:func:`_dup_graph`): driver
+               algorithms for small edge sets, distributed rounds above
+               ``SMALL_GRAPH_EDGES``.
 
 Determinism notes: every hash is md5 (identical across engines); minhash
 uses the *string* md5 hex (lexicographic min is engine-independent);
@@ -57,7 +60,7 @@ from geektime_bigdata_spark.session import CORPUS_CACHE_LEVEL
 N_HASHES = 12
 BAND_ROWS = 3  # 4 bands x 3 rows
 N_SIMHASH_BITS = 16
-SMALL_GRAPH_EDGES = 100_000  # below this, CC runs driver-side union-find
+SMALL_GRAPH_EDGES = 100_000  # graph ops' driver fast-path bound (_dup_graph)
 # Document-frequency cap for df-capped candidate generation
 # (ngram_jaccard_pairs_dfcapped): shingles appearing in more than this
 # many docs are excluded from the inverted index BEFORE pair expansion,
@@ -380,11 +383,38 @@ def simhash_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_a, doc_b)`` — the near-dup graph every graph op reads
+    (:func:`ngram_jaccard_pairs` edges), ``.cache()``d. Each call builds
+    the identical plan, so the CacheManager serves one materialization
+    to the whole graph family in a session, whichever op runs first."""
+    return ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
+
+
+def _dup_graph(
+    spark: SparkSession, sf_dir: str, n_nodes: int = 0
+) -> tuple[DataFrame, list | None]:
+    """The one size gate of the graph ops' driver fast paths:
+    ``(edges, rows)`` with the cached :func:`_dup_edges` relation and its
+    collected rows when there are at most ``SMALL_GRAPH_EDGES`` edges and
+    ``n_nodes`` is within the same bound, else ``(edges, None)``.
+
+    One bounded ``limit(k + 1).collect()`` both sizes and fetches the
+    edges, so the driver never holds more than k + 1 rows and no full
+    count runs. Over the cached relation it is one job fewer than
+    count-then-collect (sf0.001, 4 cores: dedup_clusters 7 -> 6 warm
+    jobs, pagerank 9 -> 8, kcore 5 -> 4). The gate relies on the cache:
+    on an uncached relation each incremental CollectLimit scan re-runs
+    the pair join below it."""
+    edges = _dup_edges(spark, sf_dir)
+    if n_nodes > SMALL_GRAPH_EDGES:
+        return edges, None
+    rows = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
+    return edges, (rows if len(rows) <= SMALL_GRAPH_EDGES else None)
+
+
 def dedup_clusters(
-    spark: SparkSession,
-    sf_dir: str,
-    max_iter: int = 25,
-    small_graph_edges: int | None = None,
+    spark: SparkSession, sf_dir: str, max_iter: int = 25
 ) -> DataFrame:
     """Duplicate CLUSTERS: connected components over the near-dup pair
     graph (edges = :func:`ngram_jaccard_pairs` >= 0.1), cluster id = min
@@ -409,31 +439,8 @@ def dedup_clusters(
     recursive CTE, making this iterative, non-SQL-expressible operator
     still differentially testable."""
     docs = table(spark, sf_dir, "documents")
-    # r17 gate shape (guide §1.2, §2.4): CACHE the edge relation, count
-    # it (materializing the cache), and collect only when the count
-    # proves it small. The old `limit(threshold+1).collect()` probe ran
-    # CollectLimit's incremental partition scan — several jobs, each
-    # re-executing the join/filter tail above the pair cache (measured
-    # A/B in fresh sessions at sf0.1: limit-gate 2.3 s / 21 CPU-s /
-    # 11 jobs warm vs cache-gate 1.0 s / 7 CPU-s / 5 jobs). The cache is
-    # plan-deduped across dedup_clusters / neardup_pagerank /
-    # neardup_kcore / neardup_reach_rcte (identical edge plans), the
-    # driver still never holds more than `threshold` edge rows, and the
-    # distributed path reads the same cache. Edge rows are bounded by
-    # true near-dups (LSH-banded), so the cache is pair-graph-scale,
-    # spilling to disk at worst.
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    )
-
-    threshold = (
-        SMALL_GRAPH_EDGES if small_graph_edges is None else small_graph_edges
-    )
-    n_edges = edges.count() if threshold > 0 else 0
-    edge_rows = (
-        edges.collect() if threshold > 0 and n_edges <= threshold else []
-    )
-    if threshold > 0 and n_edges <= threshold:
+    edges, edge_rows = _dup_graph(spark, sf_dir)
+    if edge_rows is not None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1232,11 +1239,7 @@ PAGERANK_ITERS = 5
 PAGERANK_D = 0.85  # damping; literals 0.15/0.85 mirrored in the oracle
 
 
-def neardup_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    small_graph_edges: int | None = None,
-) -> DataFrame:
+def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the near-duplicate graph (edges =
     :func:`ngram_jaccard_pairs`, undirected), PAGERANK_ITERS fixed
     power iterations with damping 0.85 — ranks the most central
@@ -1259,12 +1262,6 @@ def neardup_pagerank(
     has no loops; the driver check stays exact)."""
     docs = table(spark, sf_dir, "documents").select("doc_id")
     n_docs = docs.count()  # tiny scalar, same style as tfidf/bm25
-    # cached + count-gated like dedup_clusters (r17) — same plan, so the
-    # CacheManager shares one materialization across the graph family
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    )
-
     # size-gated driver fast path (same hybrid as dedup_clusters): a
     # near-dup graph is tiny even on a huge corpus, and 5 distributed
     # iterations cost ~10 shuffle stages of pure scheduling overhead.
@@ -1272,18 +1269,9 @@ def neardup_pagerank(
     # order (Python floats are doubles; quantization mirrors floor(x *
     # 1e9 + 0.5)), so the result is bit-identical to the distributed
     # path and the oracle — asserted by the fast==distributed pytest.
-    threshold = (
-        SMALL_GRAPH_EDGES if small_graph_edges is None else small_graph_edges
-    )
-    # count-gate, not limit-gate — see dedup_clusters (r17): CollectLimit's
-    # incremental scan cost ~2 s of repeated partial re-execution warm.
-    n_edges = edges.count() if threshold > 0 else 0
-    edge_rows = (
-        edges.collect()
-        if threshold > 0 and n_edges <= threshold and n_docs <= threshold
-        else []
-    )
-    if threshold > 0 and n_edges <= threshold and n_docs <= threshold:
+    # The gate binds on n_docs too: the fast path collects every doc id.
+    edges, edge_rows = _dup_graph(spark, sf_dir, n_docs)
+    if edge_rows is not None:
         import math
         from collections import defaultdict
 
@@ -1632,7 +1620,6 @@ def neardup_kcore(
     sf_dir: str,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """k-core of the near-dup graph (edges = 3-gram Jaccard >= 0.1,
     the same relation :func:`dedup_clusters` labels): iteratively peel
@@ -1653,19 +1640,8 @@ def neardup_kcore(
     the frontier geometrically on sparse dup graphs; ``max_rounds``
     raises rather than silently returning a non-fixpoint (the oracle
     unrolls exactly ``max_rounds`` peels, idempotent once converged)."""
-    # cached + count-gated like dedup_clusters (r17) — same plan, so the
-    # CacheManager shares one materialization across the graph family
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    )
-    threshold = (
-        SMALL_GRAPH_EDGES if small_graph_edges is None else small_graph_edges
-    )
-    n_edges = edges.count() if threshold > 0 else 0
-    edge_rows = (
-        edges.collect() if threshold > 0 and n_edges <= threshold else []
-    )
-    if threshold > 0 and n_edges <= threshold:
+    edges, edge_rows = _dup_graph(spark, sf_dir)
+    if edge_rows is not None:
         # driver peel: tiny graph, one pass of classic iterative removal
         adj: dict[int, set[int]] = {}
         for r in edge_rows:
@@ -1753,16 +1729,6 @@ def neardup_reach_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why the CLUSTER operators remain the production path — this op
     is the declarative cross-check and the §2.6 surface for the
     recursion feature itself. DuckDB runs the identical statement."""
-    # materialize the candidate edges ONCE: the pre-gate DP below and
-    # the recursion both act on them. r17: `.cache()` instead of
-    # `localCheckpoint` — the DP references edges a bounded
-    # RCTE_MAX_DEPTH times (linear plan growth, no 3^k blowup), the
-    # recursion references it through a temp view, and the cache is
-    # plan-deduped with the dedup_clusters/pagerank/kcore edge cache
-    # while a checkpoint re-materializes on every call.
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    )
     # Dense-component pre-gate (converge-or-raise, like the k-core and
     # star loops): the UNION ALL recursion enumerates PATHS, and on a
     # dense near-dup clique the path count under the depth bound is
@@ -1773,24 +1739,15 @@ def neardup_reach_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strictly cheaper than the query it protects and never
     # false-positives on a sparse graph the recursion could handle.
     #
-    # r17 (guide §1.2 step 1): each DP round is now a LAZY chain over
-    # the cached edge relation — round d's plan is d tiny joins replayed
-    # from cache (linear growth, single self-reference per round, so no
-    # localCheckpoint is needed; the old per-round eager checkpoint +
-    # collect pair cost 1.8 s of per-job overhead for 4 rounds of tiny
-    # work at sf0.1). An unrolled all-levels union was tried and
-    # REVERTED: AQE materializes every replayed shuffle of every branch
-    # as its own query-stage job — 105 jobs, 2x the wall it saved.
-    # r18 (VERDICT item 7): when the edge set passes the same
-    # size gate the other graph ops use, the whole DP runs DRIVER-side
-    # over the collected edges (exact integer recurrence, identical
-    # raise semantics) — the old per-round lazy-chain gate cost up to
-    # RCTE_MAX_DEPTH sequential collect jobs. One bounded collect both
-    # gates and feeds the driver DP; on the big-graph branch it is one
-    # extra job (at most SMALL_GRAPH_EDGES + 1 rows) ahead of the
-    # distributed DP.
-    rows = edges.limit(SMALL_GRAPH_EDGES + 1).collect()
-    small = len(rows) <= SMALL_GRAPH_EDGES
+    # When the edge set passes the graph size gate, the whole DP runs
+    # DRIVER-side over the collected edges (exact integer recurrence,
+    # identical raise semantics). Otherwise each DP round is a LAZY chain
+    # over the cached edges: round d's plan is d tiny joins replayed
+    # from cache, linear growth with no 3^k blowup. (An unrolled
+    # all-levels union was reverted: AQE ran every replayed shuffle of
+    # every branch as its own job, 105 jobs.)
+    edges, rows = _dup_graph(spark, sf_dir)
+    small = rows is not None
     total_paths = 0
     if small:
         from collections import defaultdict
@@ -1877,21 +1834,26 @@ def neardup_reach_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         edges2_rec.select("doc_a", "doc_b", F.lit(2).alias("depth"))
     )
-    seed.createOrReplaceTempView("gbs_rcte_seed")
-    edges2_rec.createOrReplaceTempView("gbs_rcte_edges2")
-    return spark.sql(f"""
+    # DataFrame arguments, not named temp views: a fixed view name is
+    # session-wide, so concurrent calls would read each other's edges
+    return spark.sql(
+        """
         WITH RECURSIVE walk(src, dst, depth) AS (
-            SELECT doc_a, doc_b, depth FROM gbs_rcte_seed
+            SELECT doc_a, doc_b, depth FROM {seed}
             UNION ALL
             SELECT w.src, e.doc_b, w.depth + 2
-            FROM walk w JOIN gbs_rcte_edges2 e ON w.dst = e.doc_a
-            WHERE w.depth < {RCTE_MAX_DEPTH - 1}
+            FROM walk w JOIN {edges2} e ON w.dst = e.doc_a
+            WHERE w.depth < {max_depth}
         )
         SELECT src AS doc_id,
                CAST(count(DISTINCT dst) AS BIGINT) AS n_reachable,
                CAST(max(depth) AS BIGINT) AS max_chain
         FROM walk GROUP BY src
-    """)
+        """,
+        seed=seed,
+        edges2=edges2_rec,
+        max_depth=RCTE_MAX_DEPTH - 1,
+    )
 
 
 PREFIX_JACCARD_T = 0.5  # similarity threshold; prefix shrinks as t grows
@@ -2222,7 +2184,7 @@ def neardup_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the frontier shuffles with the walks, the standard
     iterative-join sampler. The hash pick is md5 hex -> integer mod
     degree — identical arithmetic in the unrolled-CTE oracle."""
-    edges = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    edges = _dup_edges(spark, sf_dir)
     und = edges.unionByName(
         edges.select(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")

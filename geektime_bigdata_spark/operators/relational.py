@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geektime_bigdata_spark.functions import exact_sum, grid_round
-from geektime_bigdata_spark.registry import load_tables, table
+from geektime_bigdata_spark.registry import table
 
 
 def flow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,21 +175,25 @@ def upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_catalog_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: the catalog-resolved SQL entry point (homework-5's
     spark-sql surface — UnresolvedRelation -> catalog binding,
-    README.md:126-137): temp views registered by the registry, query
-    written as SQL text, same Catalyst pipeline as the DataFrame API."""
-    load_tables(spark, sf_dir)
+    README.md:126-137): query written as SQL text over the tables bound
+    as DataFrame arguments (per-call view names, so concurrent calls on
+    different ``sf_dir`` never read each other's tables), same Catalyst
+    pipeline as the DataFrame API."""
     return spark.sql(
         """
         SELECT n.n_name, count(*) AS n_orders,
                -- micro-unit accumulation: order-independent sum at the
                -- hashed contract edge (see functions.exprs.exact_sum)
                round(CAST(sum(CAST(floor(o.o_totalprice * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0, 4) AS total_price
-        FROM orders o
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        FROM {orders} o
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {nation} n ON c.c_nationkey = n.n_nationkey
         WHERE o.o_orderstatus = 'F'
         GROUP BY n.n_name
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+        nation=table(spark, sf_dir, "nation"),
     )
 
 
@@ -291,7 +295,6 @@ def sql_udf_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Declarative body = Catalyst inlines it like a macro: no Python, no
     serialization, full codegen — unlike ``spark.udf.register``. The
     DuckDB oracle expands the same expression inline."""
-    load_tables(spark, sf_dir)  # register the temp views for SQL
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gbs_grid6(x DOUBLE) "
         "RETURNS DOUBLE RETURN floor(x * 1000000.0 + 0.5) / 1000000.0"
@@ -302,9 +305,10 @@ def sql_udf_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n_docs,
                gbs_grid6(sum(n_chars) / count(*)) AS avg_chars,
                gbs_grid6(sum(length(text)) / count(*)) AS avg_text_len
-        FROM documents
+        FROM {documents}
         GROUP BY lang
-        """
+        """,
+        documents=table(spark, sf_dir, "documents"),
     )
 
 
@@ -319,10 +323,9 @@ def event_type_stats_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     injection-safe form a query service uses. Same plan as the
     equivalent SELECT (pipe syntax is pure surface syntax); the micro-
     unit sum keeps the hashed edge integer."""
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
-        FROM events
+        FROM {events}
         |> WHERE value > :thr
         |> AGGREGATE count(*) AS n,
                      sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT))
@@ -330,4 +333,5 @@ def event_type_stats_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
            GROUP BY event_type
         """,
         args={"thr": PIPE_VALUE_THRESHOLD},
+        events=table(spark, sf_dir, "events"),
     )

@@ -294,8 +294,6 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verified."""
     from pyspark.sql.functions import udtf
 
-    from geektime_bigdata_spark.registry import load_tables
-
     @udtf(
         returnType=(
             "doc_id bigint, chunk_id bigint, chunk_text string,"
@@ -309,11 +307,11 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chunk = toks[i : i + CHUNK_TOKENS]
                 yield doc_id, i // CHUNK_TOKENS, " ".join(chunk), len(chunk)
 
-    load_tables(spark, sf_dir)
     spark.udtf.register("gbs_chunk_docs", ChunkDocs)
     return spark.sql(
-        "SELECT c.* FROM documents, "
-        "LATERAL gbs_chunk_docs(doc_id, text) AS c"
+        "SELECT c.* FROM {documents}, "
+        "LATERAL gbs_chunk_docs(doc_id, text) AS c",
+        documents=table(spark, sf_dir, "documents"),
     )
 
 

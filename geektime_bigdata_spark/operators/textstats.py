@@ -1346,18 +1346,16 @@ def lang_source_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     buries it in expression nesting). DuckDB mirrors with
     ``string_agg(DISTINCT ... ORDER BY ...)``. One hash shuffle; the
     per-group string is bounded by |sources|."""
-    from geektime_bigdata_spark.registry import load_tables
-
-    load_tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT lang,
                count(*) AS n_docs,
                listagg(DISTINCT source, ',')
                    WITHIN GROUP (ORDER BY source) AS sources
-        FROM documents
+        FROM {documents}
         GROUP BY lang
-        """
+        """,
+        documents=table(spark, sf_dir, "documents"),
     )
 
 

@@ -126,3 +126,32 @@ def test_cold_memo_key_fills_once_across_threads(spark):
         sys.setswitchinterval(interval)
         release_caches(spark)
     assert calls == ["cold-key"] and all(v is values[0] for v in values)
+
+
+SQL_TEXT = [
+    "sql_catalog_query",
+    "sql_udf_lang_stats",
+    "event_type_stats_pipe",
+    "lang_source_listagg",
+    "chunk_documents",
+    "neardup_reach_rcte",
+]
+
+
+def test_sql_text_queries_read_their_own_scale_dir(spark, sf_dir, sf_medium):
+    """The queries written as SQL text, run from threads on two scale
+    dirs at once, each return what the same query returns serially on
+    its own dir: their inputs are bound per call, never through
+    session-wide temp view names another thread can replace."""
+    queries = entrymod.queries()
+
+    def rows(task):
+        name, d = task
+        return sorted(map(tuple, queries[name](spark, d).collect()))
+
+    tasks = [(n, d) for n in SQL_TEXT for d in (sf_dir, sf_medium)]
+    expect = {t: rows(t) for t in tasks}
+    with ThreadPoolExecutor(max_workers=6) as pool:
+        got = list(pool.map(rows, tasks, timeout=300))
+    wrong = [t for t, g in zip(tasks, got) if g != expect[t]]
+    assert not wrong, wrong

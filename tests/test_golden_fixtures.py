@@ -181,18 +181,20 @@ def test_except_distinct_golden(spark):
     ]
 
 
-def test_dedup_clusters_fast_path_equals_label_propagation(spark, sf_dir):
+def test_dedup_clusters_fast_path_equals_label_propagation(
+    spark, sf_dir, monkeypatch
+):
     """The driver-side union-find fast path and the distributed
     label-propagation path must produce identical components (the
     size gate is an optimization, never a semantics change)."""
-    from geektime_bigdata_spark.operators.dedup import dedup_clusters
+    from geektime_bigdata_spark.operators import dedup
 
     fast = sorted(
-        tuple(r) for r in dedup_clusters(spark, sf_dir).collect()
+        tuple(r) for r in dedup.dedup_clusters(spark, sf_dir).collect()
     )
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
     lp = sorted(
-        tuple(r)
-        for r in dedup_clusters(spark, sf_dir, small_graph_edges=0).collect()
+        tuple(r) for r in dedup.dedup_clusters(spark, sf_dir).collect()
     )
     assert fast == lp
 def test_incremental_rollup_refresh_equals_full(spark, sf_dir):
@@ -400,27 +402,26 @@ def test_dedup_clusters_chain_component(spark, monkeypatch):
         lambda *a, **k: edges,
     )
     expect = [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7), (9, 9)]
-    for kwargs in ({}, {"small_graph_edges": 0}):
+    for limit in (dedup.SMALL_GRAPH_EDGES, 0):
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", limit)
         got = sorted(
-            tuple(r) for r in dedup.dedup_clusters(spark, "x", **kwargs).collect()
+            tuple(r) for r in dedup.dedup_clusters(spark, "x").collect()
         )
-        assert got == expect, kwargs
+        assert got == expect, limit
 
 
-def test_pagerank_fast_path_equals_distributed(spark, sf_dir):
+def test_pagerank_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The driver-side PageRank fast path must be BIT-identical to the
     distributed join+aggregate loop (both run the same quantized IEEE
     recurrence)."""
-    from geektime_bigdata_spark.operators.dedup import neardup_pagerank
+    from geektime_bigdata_spark.operators import dedup
 
     fast = sorted(
-        tuple(r) for r in neardup_pagerank(spark, sf_dir).collect()
+        tuple(r) for r in dedup.neardup_pagerank(spark, sf_dir).collect()
     )
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
     dist = sorted(
-        tuple(r)
-        for r in neardup_pagerank(
-            spark, sf_dir, small_graph_edges=0
-        ).collect()
+        tuple(r) for r in dedup.neardup_pagerank(spark, sf_dir).collect()
     )
     assert fast == dist and fast
 
@@ -462,11 +463,9 @@ def test_dedup_clusters_long_chain_beats_diameter(spark, monkeypatch):
         "geektime_bigdata_spark.operators.dedup.ngram_jaccard_pairs",
         lambda *a, **k: edges,
     )
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
     got = sorted(
-        tuple(r)
-        for r in dedup.dedup_clusters(
-            spark, "x", small_graph_edges=0, max_iter=8
-        ).collect()
+        tuple(r) for r in dedup.dedup_clusters(spark, "x", max_iter=8).collect()
     )
     assert got == [(i, 0) for i in range(n)]
 
@@ -487,10 +486,13 @@ def test_kcore_driver_peel_bounded_like_oracle(spark, monkeypatch):
         "geektime_bigdata_spark.operators.dedup.ngram_jaccard_pairs",
         lambda *a, **k: edges,
     )
-    for kwargs in ({}, {"small_graph_edges": 0}):
+    default = dedup.SMALL_GRAPH_EDGES
+    for limit in (default, 0):
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", limit)
         with _pytest.raises(RuntimeError, match="did not converge"):
-            dedup.neardup_kcore(spark, "x", k=2, max_rounds=8, **kwargs)
+            dedup.neardup_kcore(spark, "x", k=2, max_rounds=8)
     # with enough rounds the same graph converges (to the empty core)
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", default)
     assert (
         dedup.neardup_kcore(spark, "x", k=2, max_rounds=12).count() == 0
     )

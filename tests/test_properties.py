@@ -3,6 +3,7 @@ invariants that must hold for ANY input, not just the fixtures."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -447,6 +448,7 @@ def test_cc_distributed_equals_driver_unionfind(
     the size gate may never change an answer. Tiny vocab forces dense
     shingle overlap, so random corpora produce real multi-node
     components (chains, cliques, singletons)."""
+    from geektime_bigdata_spark.operators import dedup
     from geektime_bigdata_spark.operators.dedup import dedup_clusters
 
     d = tmp_path_factory.mktemp("cc")
@@ -458,12 +460,9 @@ def test_cc_distributed_equals_driver_unionfind(
     driver = sorted(
         map(tuple, dedup_clusters(spark, str(d)).collect())
     )
-    dist = sorted(
-        map(
-            tuple,
-            dedup_clusters(spark, str(d), small_graph_edges=0).collect(),
-        )
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+        dist = sorted(map(tuple, dedup_clusters(spark, str(d)).collect()))
     assert driver == dist, (driver, dist)
 
 
@@ -489,6 +488,7 @@ def test_pagerank_fast_path_equals_distributed(
     """The PageRank size-gated driver fast path and the distributed
     join+aggregate iteration must agree to the quantization grid on
     ANY dup graph (same contract as the CC gate)."""
+    from geektime_bigdata_spark.operators import dedup
     from geektime_bigdata_spark.operators.dedup import neardup_pagerank
 
     d = tmp_path_factory.mktemp("pr")
@@ -498,12 +498,9 @@ def test_pagerank_fast_path_equals_distributed(
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     fast = sorted(map(tuple, neardup_pagerank(spark, str(d)).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            neardup_pagerank(spark, str(d), small_graph_edges=0).collect(),
-        )
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+        dist = sorted(map(tuple, neardup_pagerank(spark, str(d)).collect()))
     assert fast == dist, (fast, dist)
 
 
@@ -578,6 +575,7 @@ def test_kcore_distributed_equals_driver_peel(spark, tmp_path_factory, docs):
     independent reference peel over the collected edge set must agree on
     ANY near-dup graph — the size gate may never change an answer, and
     every survivor must have within-core degree >= k."""
+    from geektime_bigdata_spark.operators import dedup
     from geektime_bigdata_spark.operators.dedup import (
         KCORE_K,
         neardup_kcore,
@@ -591,12 +589,9 @@ def test_kcore_distributed_equals_driver_peel(spark, tmp_path_factory, docs):
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     driver = sorted(map(tuple, neardup_kcore(spark, str(d)).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            neardup_kcore(spark, str(d), small_graph_edges=0).collect(),
-        )
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+        dist = sorted(map(tuple, neardup_kcore(spark, str(d)).collect()))
     assert driver == dist, (driver, dist)
 
     # reference peel over the same edge relation
@@ -1299,7 +1294,7 @@ def test_dfcapped_jaccard_bounds_skewed_postings(spark, tmp_path_factory):
 
 
 def test_pagerank_large_docs_few_edges_takes_distributed_path(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, monkeypatch
 ):
     """VERDICT r15 item 5: the driver fast path collects EVERY doc id,
     so the gate must bind on n_docs as well as the edge count — a huge
@@ -1311,6 +1306,7 @@ def test_pagerank_large_docs_few_edges_takes_distributed_path(
     LocalRelation (fast path). Values are path-invariant (isolated docs
     settle at the quantized damping floor) — asserted against the
     unrestricted fast path."""
+    from geektime_bigdata_spark.operators import dedup
     from geektime_bigdata_spark.operators.dedup import neardup_pagerank
 
     d = tmp_path_factory.mktemp("prgate")
@@ -1323,12 +1319,14 @@ def test_pagerank_large_docs_few_edges_takes_distributed_path(
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
-    gated = neardup_pagerank(spark, str(d), small_graph_edges=5)
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 5)
+    gated = neardup_pagerank(spark, str(d))
     plan = gated._jdf.queryExecution().analyzed().toString()
     assert "parquet" in plan, plan  # distributed path reads the table
     assert "LocalRelation" not in plan, plan  # fast path would be driver-built
 
-    fast = neardup_pagerank(spark, str(d), small_graph_edges=100)
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 100)
+    fast = neardup_pagerank(spark, str(d))
     fplan = fast._jdf.queryExecution().analyzed().toString()
     assert "LocalRelation" in fplan or "LogicalRDD" in fplan, fplan
     assert sorted(map(tuple, gated.collect())) == sorted(

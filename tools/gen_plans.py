@@ -134,24 +134,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     # the size-gated graph ops take a driver fast path at bench scale;
-    # PLANS.md documents the SCALE plan, so force the distributed path
-    from geektime_bigdata_spark.operators import dedup as _dedup
+    # PLANS.md documents the SCALE plan, so close the gate in-process
+    from geektime_bigdata_spark.operators import dedup
 
-    forced = {
-        "dedup_clusters": lambda s, d: _dedup.dedup_clusters(
-            s, d, small_graph_edges=0
-        ),
-        "neardup_pagerank": lambda s, d: _dedup.neardup_pagerank(
-            s, d, small_graph_edges=0
-        ),
-        # force the distributed peel so the dump shows the scale plan
-        "neardup_kcore": lambda s, d: _dedup.neardup_kcore(
-            s, d, small_graph_edges=0
-        ),
-    }
+    dedup.SMALL_GRAPH_EDGES = 0
     out = [HEADER]
     for name in QUERIES:
-        df = forced.get(name, queries[name])(spark, sf_dir)
+        df = queries[name](spark, sf_dir)
         text = explain_str(df, "formatted")
         tree = text.split("\n\n")[0]
         n_ex = len(re.findall(r"\bExchange\b", tree))
