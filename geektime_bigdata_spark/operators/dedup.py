@@ -1681,6 +1681,7 @@ def neardup_kcore(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
     ).localCheckpoint()
+    n_und = und.count()
     for _ in range(max_rounds):
         deg = und.groupBy("doc_a").agg(F.count(F.lit(1)).alias("d"))
         alive = deg.filter(F.col("d") >= k).select("doc_a")
@@ -1693,10 +1694,13 @@ def neardup_kcore(
             )
             .localCheckpoint()
         )
-        if nxt.count() == und.count():  # bounded: two cached scalars
-            und = nxt
-            break
+        # bounded: one cached scalar per round; nxt is a subset of und,
+        # so equal counts mean the peel removed nothing
+        n_nxt = nxt.count()
         und = nxt
+        if n_nxt == n_und:
+            break
+        n_und = n_nxt
     else:
         raise RuntimeError(
             f"k-core did not converge in {max_rounds} rounds"

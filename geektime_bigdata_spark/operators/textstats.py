@@ -1362,52 +1362,107 @@ def lang_source_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_STEPS = 2
 
 
+def _bpe_merges(
+    spark: SparkSession, sf_dir: str, rounds: int, k: int
+) -> tuple[DataFrame, DataFrame, list]:
+    """The greedy BPE merge loop every BPE query shares: ``rounds``
+    corpus passes, each ONE pair-count aggregate (the only shuffle),
+    a collected top-``k`` window ranked by (count desc, pair asc) and
+    an in-row application of the window's kept pairs
+    (:func:`_bpe_apply`). A candidate is KEPT iff its symbol set
+    {left, right, merged} is disjoint from that of EVERY higher-ranked
+    candidate in the window (kept or not); at ``k=1`` that is the
+    serial one-merge-per-pass rule. Stops early when the corpus has no
+    pair left.
+
+    Returns ``(arrs, docs, steps)``: the checkpointed input corpus,
+    the merged corpus, and per pass ``(kept_rows, docs_after)``."""
+    arrs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
+    docs = arrs
+    steps = []
+    for _ in range(rounds):
+        # the window is <= k rows — collect it and run the disjointness
+        # filter driver-side: a broadcast + checkpoint plan for it cost
+        # 2-3 more jobs per pass (r18)
+        window = (
+            _bpe_pair_counts_from(docs)
+            .withColumn("pair", F.concat_ws(" ", F.col("l"), F.col("r")))
+            .orderBy(F.col("pair_count").desc(), F.col("pair"))
+            .limit(k)
+            .collect()
+        )
+        kept = []
+        for rn, cand in enumerate(window):
+            syms = {cand["l"], cand["r"], f"{cand['l']}_{cand['r']}"}
+            if not any(
+                syms & {hi["l"], hi["r"], f"{hi['l']}_{hi['r']}"}
+                for hi in window[:rn]
+            ):
+                kept.append(cand)
+        if not kept:
+            break  # empty corpus: nothing to learn this pass
+        docs = _bpe_apply(docs, [(c["l"], c["r"]) for c in kept])
+        steps.append((kept, docs))
+    return arrs, docs, steps
+
+
+def _bpe_train(
+    spark: SparkSession, sf_dir: str, rounds: int, k: int
+) -> DataFrame:
+    """(step, merge_rank, pair, pair_count, n_tokens_after) for the
+    kept pairs of each pass of :func:`_bpe_merges`."""
+    out = None
+    for step, (kept, docs) in enumerate(
+        _bpe_merges(spark, sf_dir, rounds, k)[2], start=1
+    ):
+        n_after = docs.agg(
+            F.sum(F.size("arr")).cast("long").alias("n_tokens_after")
+        )
+        rows = n_after.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(step).cast("long").alias("step"),
+                            F.lit(mr + 1).cast("long").alias("merge_rank"),
+                            F.lit(c["pair"]).alias("pair"),
+                            F.lit(c["pair_count"])
+                            .cast("long")
+                            .alias("pair_count"),
+                        )
+                        for mr, c in enumerate(kept)
+                    ]
+                )
+            ).alias("s"),
+            "n_tokens_after",
+        ).select(
+            "s.step", "s.merge_rank", "s.pair", "s.pair_count",
+            "n_tokens_after",
+        )
+        out = rows if out is None else out.unionByName(rows)
+    if out is None:
+        return spark.createDataFrame(
+            [], "step long, merge_rank long, pair string,"
+            " pair_count long, n_tokens_after long"
+        )
+    return out
+
+
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING loop (BPE_TRAIN_STEPS greedy merges over
     the corpus) — ARRAY-NATIVE since round 4: the corpus stays
     (doc_id, token-array) and each step is ONE pair-count aggregate
-    (the only shuffle) + a broadcast of the learned pair + an in-row
+    (the only shuffle) + the collected winning pair + an in-row
     left-to-right merge fold (see _bpe_apply) — where the earlier
     exploded-stream formulation ran three window passes and two joins
     over the full token stream per step. Same greedy left-to-right
     semantics (the fold IS the textbook definition — no run/parity
     algebra needed when the merge happens sequentially within the
     row); the DuckDB oracle and the hypothesis greedy-replay fuzz are
-    unchanged and pin the equivalence. Emits (step, pair, pair_count,
-    n_tokens_after); the token trail validates merge APPLICATION, not
-    just pair selection."""
-    docs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
-    out = None
-    for step in range(1, BPE_TRAIN_STEPS + 1):
-        counts = _bpe_pair_counts_from(docs).withColumn(
-            "pair", F.concat_ws(" ", F.col("l"), F.col("r"))
-        )
-        # the winner is ONE row by construction — collect it and inline
-        # (r18, VERDICT item 5): the old limit(1) localCheckpoint +
-        # broadcast crossJoin pair cost 2 extra jobs per round
-        top = (
-            counts.orderBy(F.col("pair_count").desc(), F.col("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break  # empty corpus: no pair to learn, no row to emit
-        docs = _bpe_apply(docs, [(top[0]["l"], top[0]["r"])])
-        row = docs.agg(
-            F.sum(F.size("arr")).cast("long").alias("n_tokens_after")
-        ).select(
-            F.lit(step).cast("long").alias("step"),
-            F.lit(top[0]["pair"]).alias("pair"),
-            F.lit(top[0]["pair_count"]).cast("long").alias("pair_count"),
-            "n_tokens_after",
-        )
-        out = row if out is None else out.unionByName(row)
-    if out is None:
-        return spark.createDataFrame(
-            [], "step long, pair string, pair_count long,"
-            " n_tokens_after long"
-        )
-    return out
+    unchanged and pin the equivalence. It is the batched trainer at
+    ``k=1``. Emits (step, pair, pair_count, n_tokens_after); the token
+    trail validates merge APPLICATION, not just pair selection."""
+    return _bpe_train(spark, sf_dir, BPE_TRAIN_STEPS, 1).drop("merge_rank")
 
 
 MIX_TOKEN_BUDGET = 1_000_000  # target training tokens to allocate
@@ -1482,16 +1537,11 @@ BPE_BATCH_ROUNDS = 2  # corpus passes in the batched trainer
 BPE_BATCH_K = 4  # merge candidates considered per pass
 
 
-def bpe_train_merges_batched(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = BPE_BATCH_ROUNDS,
-    k: int = BPE_BATCH_K,
-) -> DataFrame:
-    """Batched BPE training: learn up to ``k`` SYMBOL-DISJOINT merges
-    per corpus pass instead of one — the variant that makes a real
-    tokenizer build (10k+ merges) feasible, since corpus passes shrink
-    from ``n_merges`` to ``~n_merges/k``.
+def bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched BPE training: learn up to ``BPE_BATCH_K`` SYMBOL-DISJOINT
+    merges per corpus pass instead of one — the variant that makes a
+    real tokenizer build (10k+ merges) feasible, since corpus passes
+    shrink from ``n_merges`` to ``~n_merges/k``.
 
     Selection rule (deterministic, mirrored exactly in the oracle):
     rank the round's pairs by (count desc, pair asc); a candidate in
@@ -1500,79 +1550,13 @@ def bpe_train_merges_batched(
     the window (kept or not). Kept pairs are therefore pairwise
     disjoint, so applying them simultaneously equals applying them
     sequentially — and since round 4 the application IS simultaneous:
-    the kept set broadcasts into the same in-row left-to-right fold
+    the kept set goes into the same in-row left-to-right fold
     the serial trainer uses (the replace chain matches ANY kept
     pair at each position; disjointness guarantees the fold never has
     to choose between overlapping kept pairs). One pair-count shuffle
     per round, everything else in-row. Output: (step, merge_rank,
     pair, pair_count, n_tokens_after)."""
-    docs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
-    out = None
-    for step in range(1, rounds + 1):
-        # the candidate window is limit(k) — collect it and run the
-        # disjointness filter driver-side (r18, VERDICT item 5): the
-        # old two windows + broadcast anti-join + kept checkpoint were
-        # 3 extra jobs per round over <= k rows. Same rule, verbatim:
-        # rank by (count desc, pair asc); keep iff {l, r, l_r} is
-        # disjoint from EVERY higher-ranked candidate's symbol set
-        # (kept or not).
-        window = (
-            _bpe_pair_counts_from(docs)
-            .withColumn("pair", F.concat_ws(" ", F.col("l"), F.col("r")))
-            .orderBy(F.col("pair_count").desc(), F.col("pair"))
-            .limit(k)
-            .collect()
-        )
-        kept_rows = []
-        for rn, cand in enumerate(window):
-            syms = {cand["l"], cand["r"], f"{cand['l']}_{cand['r']}"}
-            conflict = any(
-                syms
-                & {
-                    hi["l"],
-                    hi["r"],
-                    f"{hi['l']}_{hi['r']}",
-                }
-                for hi in window[:rn]
-            )
-            if not conflict:
-                kept_rows.append(cand)
-        if not kept_rows:
-            break  # empty corpus: nothing to learn this round
-        docs = _bpe_apply(
-            docs, [(c["l"], c["r"]) for c in kept_rows]
-        )
-        n_after = docs.agg(
-            F.sum(F.size("arr")).cast("long").alias("n_tokens_after")
-        )
-        rows = n_after.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(step).cast("long").alias("step"),
-                            F.lit(mr + 1).cast("long").alias("merge_rank"),
-                            F.lit(c["pair"]).alias("pair"),
-                            F.lit(c["pair_count"])
-                            .cast("long")
-                            .alias("pair_count"),
-                        )
-                        for mr, c in enumerate(kept_rows)
-                    ]
-                )
-            ).alias("s"),
-            "n_tokens_after",
-        ).select(
-            "s.step", "s.merge_rank", "s.pair", "s.pair_count",
-            "n_tokens_after",
-        )
-        out = rows if out is None else out.unionByName(rows)
-    if out is None:
-        return spark.createDataFrame(
-            [], "step long, merge_rank long, pair string,"
-            " pair_count long, n_tokens_after long"
-        )
-    return out
+    return _bpe_train(spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH_K)
 
 
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,20 +1571,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     order). The oracle reuses the trainer's unrolled CTE chain with a
     per-document final aggregate, so train and encode verify each
     other."""
-    docs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
-    for _ in range(BPE_TRAIN_STEPS):
-        top = (
-            _bpe_pair_counts_from(docs)
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.concat_ws(" ", F.col("l"), F.col("r")),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        docs = _bpe_apply(docs, [(top[0]["l"], top[0]["r"])])
+    docs = _bpe_merges(spark, sf_dir, BPE_TRAIN_STEPS, 1)[1]
     return docs.filter(F.size("arr") >= 1).select(
         "doc_id",
         F.size("arr").cast("long").alias("n_tokens"),
@@ -1628,24 +1599,10 @@ def bpe_compression_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source final rollup, so encode and this report verify each
     other's merge sequence."""
     docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    arrs = _bpe_corpus_arrays(spark, sf_dir).localCheckpoint()
+    arrs, enc, _ = _bpe_merges(spark, sf_dir, BPE_TRAIN_STEPS, 1)
     before = arrs.select(
         "doc_id", F.size("arr").cast("long").alias("n_before")
     ).filter(F.col("n_before") >= 1)
-    enc = arrs
-    for _ in range(BPE_TRAIN_STEPS):
-        top = (
-            _bpe_pair_counts_from(enc)
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.concat_ws(" ", F.col("l"), F.col("r")),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        enc = _bpe_apply(enc, [(top[0]["l"], top[0]["r"])])
     after = enc.filter(F.size("arr") >= 1).select(
         "doc_id", F.size("arr").cast("long").alias("n_after")
     )
@@ -1963,15 +1920,15 @@ def _bpe_apply(docs: DataFrame, kept_pairs: list) -> DataFrame:
     (doc_id, arr) corpus, checkpointed.
 
     r18 (VERDICT r17 item 5): ``kept_pairs`` is the COLLECTED top-k
-    window — driver-scale by construction (``limit(1)`` / ``limit(k)``
-    gates every caller) — so each pair inlines as a literal codegen'd
+    window — driver-scale by construction (``limit(k)`` in
+    :func:`_bpe_merges`) — so each pair inlines as a literal codegen'd
     ``replace`` instead of the former collect_list aggregate +
     broadcast crossJoin + interpreted fold over a kept array; that
     removes two jobs (kept checkpoint, broadcast build) and one
-    broadcast exchange per training round. Same double-space delimiter
-    algebra as ``_BPE_APPLY_EXPR`` (kept for the in-row fold
-    documentation), same greedy left-to-right `replace` semantics,
-    fold order irrelevant because kept pairs are symbol-disjoint. An
+    broadcast exchange per training round. Double-space delimiter
+    algebra as documented above, greedy left-to-right `replace`
+    semantics, fold order irrelevant because kept pairs are
+    symbol-disjoint. An
     empty kept list round-trips the array through join/split — the
     identity on space-free tokens, exactly what the old empty
     collect_list fold did."""

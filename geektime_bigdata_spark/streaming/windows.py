@@ -37,6 +37,9 @@ from geektime_bigdata_spark.registry import (
 )
 
 SESSION_GAP_SEC = 30 * 60
+# how long a runner waits for its availableNow drain before it stops the
+# query and raises (:func:`_await_or_raise`)
+STREAM_TIMEOUT_SEC = 180
 
 # One streaming start at a time per process: the set/start/restore scope
 # of :func:`_start` must not interleave with another thread's, or one
@@ -97,7 +100,6 @@ def _run_to_memory(
     df: DataFrame,
     width: int,
     mode: str,
-    timeout_sec: int,
     *,
     single_batch: bool = False,
     conf: dict | None = None,
@@ -115,7 +117,7 @@ def _run_to_memory(
             .trigger(availableNow=True)
         )
         q = _start(writer, df.sparkSession, width, conf)
-        _await_or_raise(q, timeout_sec)
+        _await_or_raise(q, STREAM_TIMEOUT_SEC)
         if single_batch:
             _assert_single_batch(q)
     return df.sparkSession.table(name)
@@ -172,9 +174,7 @@ def _exact_value_sum(rounded: int = 6):
     return (F.floor(x * k + F.lit(0.5)) / k).cast("double")
 
 
-def run_streaming_hourly_rollup(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window x event_type counts/sums with a 1-hour
     watermark, executed with ``availableNow`` into a memory sink.
 
@@ -195,11 +195,11 @@ def run_streaming_hourly_rollup(
             "total_value",
         )
     )
-    return _run_to_memory(agg, width, "complete", timeout_sec)
+    return _run_to_memory(agg, width, "complete")
 
 
 def run_streaming_sliding_counts(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Hopping-window streaming aggregate: 2-hour windows advancing
     hourly, watermarked. Batch twin:
@@ -216,11 +216,11 @@ def run_streaming_sliding_counts(
         )
         .select(F.col("w.start").alias("w_start"), "n", "total_value")
     )
-    return _run_to_memory(agg, width, "complete", timeout_sec)
+    return _run_to_memory(agg, width, "complete")
 
 
 def run_streaming_enriched_rollup(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Stream-static join: the events stream enriched against the static
     ``customer`` dimension (user_id -> mktsegment), then a per-segment
@@ -244,12 +244,10 @@ def run_streaming_enriched_rollup(
             _exact_value_sum().alias("total_value"),
         )
     )
-    return _run_to_memory(agg, width, "complete", timeout_sec)
+    return _run_to_memory(agg, width, "complete")
 
 
-def run_streaming_attribution(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 180
-) -> DataFrame:
+def run_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream join: purchases joined to the same user's clicks in
     the preceding hour — both sides are watermarked streams, so Spark
     buffers only the last ~2h of clicks per key in state (the time-range
@@ -278,11 +276,11 @@ def run_streaming_attribution(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") < F.col("p_ts")),
     ).select("purchase_id", "user_id", "c_ts")
-    return _run_to_memory(joined, width, "append", timeout_sec)
+    return _run_to_memory(joined, width, "append")
 
 
 def run_streaming_attribution_outer(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 180
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join — purchases with their
     preceding-hour clicks, null-padded when no click exists. The outer
@@ -322,12 +320,12 @@ def run_streaming_attribution_outer(
         "leftOuter",
     ).select("purchase_id", "user_id", "p_ts", "c_ts")
     return _run_to_memory(
-        joined, width, "append", timeout_sec, single_batch=True
+        joined, width, "append", single_batch=True
     )
 
 
 def run_streaming_attribution_full_outer(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 180
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Watermarked stream-stream FULL OUTER join — the last join type of
     the §2.7 matrix (inner, left-outer, full-outer): purchases x
@@ -368,12 +366,12 @@ def run_streaming_attribution_full_outer(
         "fullOuter",
     ).select("purchase_id", "p_user", "p_ts", "click_id", "c_user", "c_ts")
     return _run_to_memory(
-        joined, width, "append", timeout_sec, single_batch=True
+        joined, width, "append", single_batch=True
     )
 
 
 def run_streaming_session_windows(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """NATIVE ``session_window`` aggregation under Structured Streaming —
     the engine-managed gap-merge path (state store sessions merged by the
@@ -408,12 +406,10 @@ def run_streaming_session_windows(
             "session_value",
         )
     )
-    return _run_to_memory(agg, width, "complete", timeout_sec)
+    return _run_to_memory(agg, width, "complete")
 
 
-def run_streaming_dedup(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: first event per (user_id, event_type) key
     passes, later duplicates drop —
     ``dropDuplicatesWithinWatermark`` keeps per-key state only within the
@@ -433,7 +429,7 @@ def run_streaming_dedup(
         ["user_id", "event_type"]
     )
     return _run_to_memory(
-        deduped, width, "append", timeout_sec, single_batch=True
+        deduped, width, "append", single_batch=True
     )
 
 
@@ -471,7 +467,7 @@ class _UserTotalsProcessor(StatefulProcessor):
 
 
 def run_streaming_user_totals_tws(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 180
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Arbitrary stateful processing via Spark 4's ``transformWithState``
     API — the successor to ``applyInPandasWithState``: a
@@ -511,7 +507,7 @@ def run_streaming_user_totals_tws(
             "RocksDBStateStoreProvider"
         )
     }
-    t = _run_to_memory(out, width, "update", timeout_sec, conf=rocksdb)
+    t = _run_to_memory(out, width, "update", conf=rocksdb)
     return (
         t.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total_value_micros")).alias("s"))
@@ -524,7 +520,7 @@ def run_streaming_user_totals_tws(
 
 
 def run_streaming_upsert_sink(
-    spark: SparkSession, sf_dir: str, out_dir: str, timeout_sec: int = 180
+    spark: SparkSession, sf_dir: str, out_dir: str
 ) -> DataFrame:
     """``foreachBatch`` upsert sink: each micro-batch merges its rows into
     a keyed parquet state (latest write per (user_id, event_type) wins) —
@@ -571,7 +567,7 @@ def run_streaming_upsert_sink(
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
-    _await_or_raise(_start(writer, spark, width), timeout_sec)
+    _await_or_raise(_start(writer, spark, width), STREAM_TIMEOUT_SEC)
     return spark.read.parquet(state_path)
 
 
@@ -642,7 +638,7 @@ def _sessionize_group(
 
 
 def run_streaming_sessionization(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     sessionization with a 30-minute gap — the streaming twin of the batch
@@ -669,7 +665,7 @@ def run_streaming_sessionization(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    t = _run_to_memory(out, width, "update", timeout_sec)
+    t = _run_to_memory(out, width, "update")
     # newest emission per session wins (n_events strictly grows; the
     # struct-max carries the matching value/duration along)
     return (

@@ -1,10 +1,12 @@
-"""Pin the bench harness's stdout contract and the scale_stress
-probe-mode guards.
+"""Pin the bench harness's stdout contract, scale_stress's merge guard
+and the committed SCALING.json probe sections.
 
-bench.py's final stdout line is what the BENCH_r*.json snapshots parse,
-and scale_stress's guards protect SCALING.json's evidentiary integrity.
-No SparkSession is needed: the bench helpers are pure, and every
-scale_stress guard exits before the JVM would boot.
+bench.py's final stdout line is what the BENCH_r*.json snapshots parse.
+scale_stress refuses to merge a SCALE_STRESS_ONLY subset into a file
+measured on another grid, and the probe sections kept in SCALING.json
+must match their declared doublings. No SparkSession is needed: the
+bench helpers are pure, and the scale_stress guard exits before the JVM
+would boot.
 """
 
 from __future__ import annotations
@@ -37,104 +39,26 @@ def test_pass_drift_uses_warm_passes_only():
     assert spread == 1.3
 
 
-def _scale_stress_module():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "scale_stress_under_test",
-        os.path.join(HERE, "tools", "scale_stress.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)  # module level is constants only
-    return mod
-
-
-def test_scale_stress_steal_ctx_rate():
-    ss = _scale_stress_module()
-    ctx = ss._steal_ctx(
-        {"steal_j": 100, "load1": 1.0}, {"steal_j": 700}, 60.0
-    )
-    assert ctx == {"wall": 60.0, "d_steal_j": 600, "rate": 10.0}
-    # missing counter (no /proc steal field): no rate, no delta
-    assert ss._steal_ctx({}, {"steal_j": 5}, 60.0) == {"wall": 60.0}
-    # degenerate window: delta recorded, rate omitted
-    assert "rate" not in ss._steal_ctx(
-        {"steal_j": 1}, {"steal_j": 2}, 0.0
-    )
-
-
-def test_scale_stress_prune_runs_keeps_newest():
-    ss = _scale_stress_module()
-    runs = {
-        f"2026-01-{d:02d}T00:00:00Z": {"n": d} for d in range(1, 26)
-    }
-    pruned = ss._prune_runs(runs, cap=20)
-    assert len(pruned) == 20
-    assert "2026-01-25T00:00:00Z" in pruned  # newest kept
-    assert "2026-01-05T00:00:00Z" not in pruned  # oldest dropped
-    small = {"2026-01-01T00:00:00Z": {}}
-    assert ss._prune_runs(small, cap=20) is small  # under cap: untouched
-
-
-def _run_scale_stress(env_extra: dict[str, str], *argv: str):
-    env = {**os.environ, **env_extra}
-    return subprocess.run(
+def test_scale_stress_refuses_mismatched_grid_merge(tmp_path):
+    """A SCALE_STRESS_ONLY merge into a copy of SCALING.json whose
+    factors differ from the tool's grid exits before the JVM starts and
+    leaves the file as it was."""
+    with open(os.path.join(HERE, "SCALING.json")) as fh:
+        doc = json.load(fh)
+    prior = tmp_path / "scaling.json"
+    body = json.dumps({**doc, "factors": [1, 2, 8]})
+    prior.write_text(body)
+    r = subprocess.run(
         [sys.executable, os.path.join(HERE, "tools", "scale_stress.py"),
-         *argv],
+         str(prior)],
         capture_output=True,
         text=True,
-        env=env,
+        env={**os.environ, "SCALE_STRESS_ONLY": "sessionize"},
         timeout=120,
     )
-
-
-def test_scale_stress_refuses_ambiguous_probe_vars():
-    r = _run_scale_stress(
-        {"SCALE_STRESS_PROBE8X": "a", "SCALE_STRESS_PROBE16X": "b"},
-        os.path.join(HERE, "SCALING.json"),
-    )
     assert r.returncode != 0
-    assert "SCALE_STRESS_PROBE16X" in r.stderr
-    assert "SCALE_STRESS_PROBE8X" in r.stderr
-
-
-def test_scale_stress_refuses_probe_without_existing_grid(tmp_path):
-    missing = str(tmp_path / "nope.json")
-    r = _run_scale_stress({"SCALE_STRESS_PROBE16X": "a"}, missing)
-    assert r.returncode != 0
-    assert "full 1x/2x/4x measurement" in r.stderr
-    assert not os.path.exists(missing)  # no empty-grid file written
-    # same refusal with no path at all
-    r = _run_scale_stress({"SCALE_STRESS_PROBE16X": "a"})
-    assert r.returncode != 0
-    assert "no path given" in r.stderr
-
-
-def test_scale_stress_rejects_unrecognized_scale_partitions_value():
-    # a typo must hard-fail, not silently disable the mode (ADVICE
-    # r10); case-folded truthy forms are accepted (TRUE reaches the
-    # probe-mode guard instead of the unrecognized-value one)
-    r = _run_scale_stress(
-        {"SCALE_STRESS_SCALE_PARTITIONS": "maybe"},
-        os.path.join(HERE, "SCALING.json"),
-    )
-    assert r.returncode != 0
-    assert "unrecognized SCALE_STRESS_SCALE_PARTITIONS" in r.stderr
-    r = _run_scale_stress(
-        {"SCALE_STRESS_SCALE_PARTITIONS": "TRUE"},
-        os.path.join(HERE, "SCALING.json"),
-    )
-    assert r.returncode != 0
-    assert "probe modes" in r.stderr
-
-
-def test_scale_stress_refuses_scale_partitions_outside_probe_mode():
-    r = _run_scale_stress(
-        {"SCALE_STRESS_SCALE_PARTITIONS": "1"},
-        os.path.join(HERE, "SCALING.json"),
-    )
-    assert r.returncode != 0
-    assert "probe modes" in r.stderr
+    assert "refusing SCALE_STRESS_ONLY merge" in r.stderr
+    assert prior.read_text() == body
 
 
 @pytest.mark.parametrize("key", ["probe8x", "probe16x", "probe32x"])

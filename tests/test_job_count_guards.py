@@ -77,3 +77,18 @@ def test_random_walks_cost_is_independent_of_query_order(spark, sf_dir):
     _warm_job_count(spark, "dedup_clusters", sf_dir)
     after = _warm_job_count(spark, "neardup_random_walks", sf_dir)
     assert alone == after, (alone, after)
+
+
+def test_kcore_distributed_peel_counts_each_frame_once(
+    spark, sf_dir, monkeypatch
+):
+    """With the size gate at 0 the k-core peel runs distributed. Each
+    round counts only its new frame and carries that count into the
+    next round's convergence check: 20 warm jobs (22 when every round
+    also re-counted the previous frame)."""
+    from geektime_bigdata_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+    release_caches(spark)
+    jobs = _warm_job_count(spark, "neardup_kcore", sf_dir)
+    assert jobs <= 21, jobs

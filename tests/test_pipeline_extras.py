@@ -563,9 +563,12 @@ def test_bpe_batched_conflict_rule(spark, monkeypatch):
         "geektime_bigdata_spark.operators.textstats.table",
         lambda *a: docs,
     )
+    monkeypatch.setattr(
+        "geektime_bigdata_spark.operators.textstats.BPE_BATCH_ROUNDS", 1
+    )
     out = {
         (r["step"], r["merge_rank"]): r
-        for r in bpe_train_merges_batched(spark, "x", rounds=1).collect()
+        for r in bpe_train_merges_batched(spark, "x").collect()
     }
     assert set(out) == {(1, 1), (1, 2)}
     assert out[(1, 1)]["pair"] == "a b" and out[(1, 1)]["pair_count"] == 10
@@ -588,7 +591,10 @@ def test_bpe_batched_overlap_parity(spark, monkeypatch):
         "geektime_bigdata_spark.operators.textstats.table",
         lambda *a: docs,
     )
-    out = bpe_train_merges_batched(spark, "x", rounds=1).collect()
+    monkeypatch.setattr(
+        "geektime_bigdata_spark.operators.textstats.BPE_BATCH_ROUNDS", 1
+    )
+    out = bpe_train_merges_batched(spark, "x").collect()
     assert len(out) == 1
     r = out[0]
     # 4 adjacent occurrences, left-to-right keeps offsets 0 and 2
