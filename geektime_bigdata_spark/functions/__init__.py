@@ -11,6 +11,7 @@ from geektime_bigdata_spark.functions.exprs import (
     exact_sum,
     grid_round,
     hash_unit_weight,
+    jaccard,
     lift_collected,
     shingles,
     sum_micros,
@@ -27,6 +28,7 @@ __all__ = [
     "hash_unit_weight",
     "exact_sum",
     "grid_round",
+    "jaccard",
     "sum_micros",
     "values_relation",
     "lift_collected",

@@ -184,6 +184,18 @@ def grid_round(col: Column | str, scale: int = 6) -> Column:
     return (F.floor(c * k + F.lit(0.5)) / k).cast("double")
 
 
+def jaccard() -> Column:
+    """Set Jaccard ``|A & B| / |A | B|`` from the intersection size
+    ``c`` and the two set sizes ``n_a``, ``n_b``: ``c / (n_a + n_b - c)``,
+    an integer-ratio double (one IEEE division in every engine) on the
+    1e-6 grid via :func:`grid_round`. The engine's one Jaccard formula —
+    shingle-pair, candidate-verify and source-vocabulary scores all
+    read it."""
+    return grid_round(
+        F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c")), 6
+    )
+
+
 def values_relation(spark, rows, schema: str):
     """Lift small driver-side numeric rows into a JVM VALUES
     LocalRelation (r17, guide §4.1): ``spark.createDataFrame`` on a

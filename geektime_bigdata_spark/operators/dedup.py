@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from geektime_bigdata_spark.functions import (
     grid_round,
+    jaccard,
     shingles,
     tokens,
     values_relation,
@@ -55,7 +56,7 @@ from geektime_bigdata_spark.registry import (
     spread,
     table,
 )
-from geektime_bigdata_spark.session import CORPUS_CACHE_LEVEL
+from geektime_bigdata_spark.operators.text import token_tf
 
 N_HASHES = 12
 BAND_ROWS = 3  # 4 bands x 3 rows
@@ -84,22 +85,13 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline. The relation is |docs| x ~|tokens| short strings — the
     working set a shingle-based pipeline has to hold somewhere anyway;
     in production it is the persisted intermediate a dedup job writes
-    once and reuses across stages."""
-    # r18 measured revert (guide §1.1 record): spreading this head at
-    # ARROW_PASS_BYTES (width 4 at sf0.1) was tried and REVERTED
-    # on an interleaved same-session A/B — the light consumers were
-    # flat but ngram_jaccard_pairs_dfcapped's candidate self-join reads
-    # the cached relation's partitioning and its WALL doubled
-    # (0.9-1.2 s -> 2.0-2.2 s at slightly lower CPU): the heavy
-    # join tiers genuinely use the 32-way layout, which ROW_WORK_BYTES
-    # keeps at sf0.1. duplicate_span_stats' OWN positional head (which
-    # no join reuses) takes ARROW_PASS_BYTES with a clean
-    # 12.7 -> 2.2 CPU-s win.
+    once and reuses across stages. Spread at ROW_WORK_BYTES: the
+    candidate self-joins read the cached relation's partitioning."""
     docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
     return (
         docs.select("doc_id", tokens().alias("toks"))
         .select("doc_id", F.explode(shingles()).alias("shingle"))
-        .persist(CORPUS_CACHE_LEVEL)
+        .cache()
     )
 
 
@@ -136,6 +128,20 @@ def _doc_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .cache()
     )
+
+
+def _with_sizes(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame
+) -> DataFrame:
+    """``pairs`` (keyed ``doc_a``, ``doc_b``) with each side's
+    distinct-shingle count joined on as ``n_a`` and ``n_b``, the inputs
+    of :func:`jaccard`. The joins carry no broadcast hint: the size
+    relation is one row per document, so AQE broadcasts it while it is
+    small and falls back to a shuffled join at corpus scale."""
+    sizes = _doc_shingle_sizes(spark, sf_dir)
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,24 +238,17 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit j of the fingerprint is 1 iff the tf-weighted sum of (+-1) votes
     from token-hash bit j is positive.
 
-    All 16 bit-vote sums are parallel aggregate expressions over the one
-    (doc, word) tf relation — a single shuffle, no bits cross join; the
-    final fingerprint is a pure projection.
+    All 16 bit-vote sums are parallel aggregate expressions over the
+    shared (doc, word) relation :func:`~text.token_tf` — one shuffle
+    keyed on doc_id, no bits cross join; the final fingerprint is a pure
+    projection.
 
-    Cached (r17, guide §2.4): one row per doc (two longs) — the
-    signature table class. neardup_pair_features joins BOTH pair sides
-    against it, and uncached each side re-ran the whole
-    explode+md5+16-agg pipeline (plan-dedup never fires on uncached
-    twins under AQE)."""
-    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    tf = (
-        docs.select("doc_id", F.explode(tokens()).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            "h", F.conv(F.substring(F.md5("word"), 1, 4), 16, 10).cast("long")
-        )
+    Cached: one row per doc (two longs), the signature-table class.
+    neardup_pair_features joins both pair sides against it. The plan's
+    leaf is the token_tf memo, one checkpoint per session, so the
+    cached plan matches across calls."""
+    tf = token_tf(spark, sf_dir).withColumn(
+        "h", F.conv(F.substring(F.md5("word"), 1, 4), 16, 10).cast("long")
     )
     votes = tf.groupBy("doc_id").agg(
         *[
@@ -299,10 +298,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         # four consumers below (hamming-0 pairs, value bands, both sides
-        # of the group-size join) would each recompute the whole
-        # explode+md5+16-agg fingerprint pipeline; the value-group table
-        # is <= 2^16 rows, so materialize it once (measured 2.7s -> ~1s
-        # at sf0.1)
+        # of the group-size join); the value-group table is <= 2^16 rows
         .cache()
     )
     same = groups.filter(F.col("n_docs") > 1).select(
@@ -604,32 +600,22 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard similarity for doc pairs sharing >= 1 shingle,
-    thresholded at 0.1 — the verification stage a MinHash candidate pass
-    would feed at scale.
+    """Exact 3-gram Jaccard similarity ``(doc_a, doc_b, jaccard)``,
+    doc_a < doc_b, for every doc pair sharing >= 1 shingle, thresholded
+    at 0.1 — the verification stage a MinHash candidate pass would feed
+    at scale, and the edge set of the near-dup graph (:func:`_dup_edges`).
 
-    Pair generation is the inverted-index posting-list expansion: ONE
-    groupBy collects each shingle's sorted doc list, an array-combinations
-    projection emits its co-occurrence pairs, and a second aggregate
-    counts intersections per pair. One scan of the shingle relation (the
-    self-join formulation scanned it twice and shuffled both sides); work
-    is sum over shingles of |posting|^2 — bounded by dropping/salting
-    top-frequency shingles at scale (stopword trigrams), unnecessary
-    here."""
-    sizes = _doc_shingle_sizes(spark, sf_dir)
+    Scale shape: the shared-shingle counts come from the cached
+    shingle-keyed self-join :func:`_shingle_pair_intersections`, whose
+    work is sum over shingles of C(|posting|, 2) — bounded at scale by
+    dropping top-frequency shingles first, as
+    :func:`ngram_jaccard_pairs_dfcapped` does; the set sizes join on
+    through :func:`_with_sizes`. Determinism: :func:`jaccard` is an
+    integer-ratio double on the 1e-6 grid."""
     inter = _shingle_pair_intersections(spark, sf_dir)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    jaccard = F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c"))
-    # sizes joins carry NO broadcast hint (VERDICT r15): `sizes` is one
-    # row per document — corpus cardinality — and a forced hint would
-    # override Spark's size logic into an executor-OOM at 10^9+ docs.
-    # Unhinted, AQE still broadcasts at test scale and shifts to a
-    # shuffled join when the relation is genuinely big.
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", grid_round(jaccard, 6).alias("jaccard"))
+        _with_sizes(spark, sf_dir, inter)
+        .select("doc_a", "doc_b", jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= 0.1)
     )
 
@@ -705,25 +691,17 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes — two unhinted equi-joins (AQE broadcasts the size table while
     it is small, shuffles it once it is corpus-scale), no new expansion.
     Contract edges are integer-ratio doubles on the 1e-6 grid."""
-    sizes = _doc_shingle_sizes(spark, sf_dir)
     inter = _shingle_pair_intersections(spark, sf_dir)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     cont_a = grid_round(F.col("c") / F.col("n_a"), 6)
     cont_b = grid_round(F.col("c") / F.col("n_b"), 6)
-    jac = grid_round(
-        F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c")), 6
-    )
-    # sizes joins unhinted (VERDICT r15): one row per doc — let AQE pick
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _with_sizes(spark, sf_dir, inter)
         .select(
             "doc_a",
             "doc_b",
             cont_a.alias("containment_a"),
             cont_b.alias("containment_b"),
-            jac.alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
         .filter(
             F.greatest(F.col("containment_a"), F.col("containment_b")) >= 0.4
@@ -819,66 +797,101 @@ CONTAM_DF_CAP = 16
 
 
 def _contam_scored(
-    spark: SparkSession, sf_dir: str, max_df: int | None
-) -> DataFrame:
-    """The shared (eval_doc_id, doc_id, n_shared_shingles, score_micros)
-    scoring relation of the contamination family: df-capped probe, one
-    cached pass, eval-bounded broadcasts, LONG micro scores — see
-    :func:`contamination_retrieval` (which ranks it per eval item) and
-    :func:`decontaminate_corpus` (which rolls it up per train doc) for
-    the scale argument."""
+    spark: SparkSession,
+    sf_dir: str,
+    suites: tuple[int, ...],
+    max_df: int | None,
+) -> tuple[dict, DataFrame]:
+    """The one scorer of the contamination family: ``(sizes, scored)``
+    over the benchmark suites ``suites``. Suite ``m``'s eval set is
+    ``doc_id % m == 0`` and its train side every other document; a
+    NULL doc_id is on neither side.
+
+    - ``sizes[m] = (n_eval, n_train)``, from one driver-row aggregate.
+    - ``scored`` is ``(suite, eval_doc_id, doc_id, n_shared_shingles,
+      score_micros)``: one row per (suite, eval item, train doc) that
+      share a shingle surviving the df cap, scored as the LONG sum over
+      those shingles of the BM25 idf
+      ``ln((n_train - df + 0.5) / (df + 0.5) + 1)`` (Lucene variant,
+      over TRAIN document frequency), grid-rounded per shingle to 1e-6
+      and summed as micros — associative, so partitioning cannot move
+      a score.
+
+    Scale shape: suite membership is a per-row array filter on doc_id;
+    the distinct (suite, shingle) eval relation broadcasts (bounded by
+    the eval sets, not the corpus) and the one corpus-scale probe fans
+    each matching train shingle out by at most |suites| rows. The probe
+    output is repartitioned by (suite, shingle), an AQE-sized exchange
+    the df aggregate reuses, and cached because the df aggregate and
+    the scoring join both read it. Shingles with train df over
+    ``max_df`` (boilerplate, see CONTAM_DF_CAP) drop out in the inner
+    join with the capped idf relation, before the eval-doc fan-out, so
+    per-shingle work stays within max_df x df_eval; ``max_df=None``
+    keeps every shingle. n_train enters the idf as a literal map keyed
+    on suite, so it adds no join."""
+    docs = table(spark, sf_dir, "documents")
+    row = docs.agg(
+        *[
+            F.count(F.when(F.col("doc_id") % m == 0, 1)).alias(f"ev{m}")
+            for m in suites
+        ],
+        *[
+            F.count(F.when(F.col("doc_id") % m != 0, 1)).alias(f"tr{m}")
+            for m in suites
+        ],
+    ).collect()[0]
+    sizes = {m: (row[f"ev{m}"], row[f"tr{m}"]) for m in suites}
     sh = _doc_shingles(spark, sf_dir)
-    ev = (
-        sh.filter(F.col("doc_id") % EVAL_SET_MOD == 0)
-        .select(F.col("doc_id").alias("eval_doc_id"), "shingle")
+    member = F.filter(
+        F.array(*[F.lit(m).cast("long") for m in suites]),
+        lambda s: F.col("doc_id") % s == 0,
     )
-    train = sh.filter(F.col("doc_id") % EVAL_SET_MOD != 0)
-    n_train = (
-        spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-        .filter(F.col("doc_id") % EVAL_SET_MOD != 0)
-        .count()
-    )  # tiny scalar, same style as bm25's n_docs
-    ev_shingles = ev.select("shingle").distinct()
-    # repartition BY SHINGLE before caching (r17): the broadcast probe
-    # inherits the corpus scan's partitioning, so the cached slice —
-    # eval-bounded, tiny next to the corpus — otherwise pins every
-    # consumer stage to 32 near-idle tasks (measured: 2 stages x 32
-    # tasks x ~0.26 s overhead each over 0.5 MB of cache). The keyed
-    # exchange is AQE-sized (one partition here, more as the slice
-    # grows) and the df aggregate below reuses the hash partitioning
-    # instead of shuffling again.
+    ev = sh.select(
+        F.explode(member).alias("suite"),
+        F.col("doc_id").alias("eval_doc_id"),
+        "shingle",
+    )
     hits = (
-        train.join(F.broadcast(ev_shingles), "shingle")
-        .repartition("shingle")
+        sh.join(
+            F.broadcast(ev.select("suite", "shingle").distinct()), "shingle"
+        )
+        .filter(F.col("doc_id") % F.col("suite") != 0)
+        .repartition("suite", "shingle")
         .cache()
     )
-    df_ = hits.groupBy("shingle").agg(
+    df_ = hits.groupBy("suite", "shingle").agg(
         F.count(F.lit(1)).alias("df")  # (doc, shingle) rows are distinct
     )
     if max_df is not None:
         df_ = df_.filter(F.col("df") <= max_df)
+    n_train = F.create_map(
+        *[
+            x
+            for m in suites
+            for x in (F.lit(m).cast("long"), F.lit(float(sizes[m][1])))
+        ]
+    )[F.col("suite")]
     idf = F.log(
-        (F.lit(float(n_train)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
+        (n_train - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
         + F.lit(1.0)
     )
     rare = df_.select(
+        "suite",
         "shingle",
         F.floor(grid_round(idf, 6) * F.lit(1000000.0) + F.lit(0.5))
         .cast("long")
         .alias("idf_micros"),
     )
-    return (
-        # the capped idf join FIRST: it prunes hot shingles before the
-        # eval fan-out multiplies each hit row by df_eval(shingle)
-        hits.join(F.broadcast(rare), "shingle")  # eval-bounded, capped
-        .join(F.broadcast(ev), "shingle")
-        .groupBy("eval_doc_id", "doc_id")
+    scored = (
+        hits.join(F.broadcast(rare), ["suite", "shingle"])
+        .join(F.broadcast(ev), ["suite", "shingle"])
+        .groupBy("suite", "eval_doc_id", "doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shared_shingles"),
             F.sum("idf_micros").cast("long").alias("score_micros"),
         )
     )
+    return sizes, scored
 
 
 def contamination_retrieval(
@@ -887,49 +900,24 @@ def contamination_retrieval(
     k: int = CONTAM_TOPK,
     max_df: int | None = CONTAM_DF_CAP,
 ) -> DataFrame:
-    """IDF-weighted decontamination retrieval (VERDICT r15 item 7): for
-    every EVAL item (the held-out set, ``doc_id % 97 == 0`` as in
-    :func:`benchmark_contamination`), the top-k training documents
-    ranked by the IDF-weighted shared-shingle score
-    ``sum over shared shingles of idf(shingle)`` — the retrieval-mining
-    composition of the contamination flag (which counts shared shingles
-    uniformly, so boilerplate trigrams dominate) with the BM25 idf
-    (Lucene variant, over TRAIN document frequency): one shared RARE
-    shingle now outweighs many stopword shingles, which is the ranking
-    an actual decontamination review reads. Output per (eval item,
-    train doc): shared count, the micro-summed idf score, and the rank.
+    """IDF-weighted decontamination retrieval: for every EVAL item (the
+    held-out set ``doc_id % 97 == 0``, as in
+    :func:`benchmark_contamination`), the top-k training documents by
+    the IDF-weighted shared-shingle score of :func:`_contam_scored`.
+    Unlike the uniform shared-shingle count of the flag, one shared
+    RARE shingle outweighs many boilerplate shingles, which is the
+    ranking a decontamination review reads. Output per (eval item,
+    train doc): the shared count, the score, and the rank.
 
-    Scale shape: the eval side reduces to its distinct (eval doc,
-    shingle) relation — benchmark suites are tiny next to the corpus,
-    so it broadcasts (bounded by the EVAL SET, not the corpus — the
-    class of hint the r15 verdict kept); train shingles probe it
-    map-side at scan speed, exactly the benchmark_contamination plan,
-    and the probe output is CACHED so its two consumers (the df
-    aggregate and the pair expansion) run it once (ADVICE r16; the
-    cache is disk-spillable and at worst the size of the eval-shared
-    slice of the shingle relation, which is itself already cached).
-    Document frequency is computed ONLY for shingles the probe
-    survived (df of a non-eval shingle is never needed), so the idf
-    relation is eval-bounded too. Shingles with train-side df over
-    ``max_df`` (boilerplate — see CONTAM_DF_CAP) are dropped BEFORE
-    the pair expansion via the inner join with the capped idf relation
-    (equivalent to the dfcapped hot-set anti-join, one join cheaper),
-    so per-shingle expansion is bounded at max_df x df_eval no matter
-    how hot the shingle: the uncapped plan materialized df_train x
-    df_eval rows per shingle, a stage flood at crawl scale (VERDICT
-    r16 item 1). ``max_df=None`` restores uncapped semantics (the
-    comparison arm of the rare-ranking pytest fixture). The per-pair
-    aggregate shuffles on (eval_doc_id, doc_id) with map-side
-    partials; the top-k window partitions by eval item — |eval|
-    partitions, each holding only that item's candidate rows.
+    Scale shape: the scorer's; the top-k window partitions by eval
+    item, so each partition holds only that item's candidate rows.
+    ``max_df=None`` gives the uncapped scores.
 
-    Determinism: per-shingle idf grid-rounds to 1e-6, the pair score
-    accumulates the micros as LONGs (associative — partitioning can
-    never flip a sum), ranking compares the integer with a doc_id
+    Determinism: ranking compares the LONG micro score with a doc_id
     tiebreak, and the emitted double is micros/1e6 — the exact_sum
     contract. The oracle writes every float op in the same order and
     mirrors the df cap as a WHERE on its df CTE."""
-    scored = _contam_scored(spark, sf_dir, max_df)
+    _, scored = _contam_scored(spark, sf_dir, (EVAL_SET_MOD,), max_df)
     w = Window.partitionBy("eval_doc_id").orderBy(
         F.col("score_micros").desc(), F.col("doc_id")
     )
@@ -967,106 +955,36 @@ def contamination_suite_report(
     suites: tuple[int, ...] = CONTAM_SUITES,
     max_df: int = CONTAM_DF_CAP,
 ) -> DataFrame:
-    """Multi-suite decontamination REPORT (VERDICT r16 item 8): the
-    aggregate view a data-curation review actually reads — one row per
-    benchmark suite with the suite's eval/train sizes, how many eval
-    items retrieved any training match, how many matched STRONGLY
-    (top-1 IDF score >= 5.0, see CONTAM_STRONG_MICROS), the summed
-    top-1 score mass, and the two contamination rates. Composes
-    :func:`contamination_retrieval`'s scoring over every suite in ONE
-    corpus probe instead of per-suite reruns.
+    """Multi-suite decontamination REPORT: one row per benchmark suite
+    with the suite's eval/train sizes, how many eval items retrieved any
+    training match, how many matched STRONGLY (top-1 score >= 5.0, see
+    CONTAM_STRONG_MICROS), the summed top-1 score mass, and the two
+    contamination rates. Every suite is scored by one
+    :func:`_contam_scored` probe, not one rerun per suite.
 
-    Scale shape: suite membership is a per-row array filter on doc_id
-    (map-side, no shuffle); the distinct (suite, shingle) eval
-    relation broadcasts (bounded by the union of the eval sets — the
-    kept hint class); the single corpus-scale probe fans each matching
-    train shingle out by at most |suites| rows; df is per (suite,
-    shingle) over probe survivors (eval-bounded) and the df cap drops
-    boilerplate before the eval-doc fan-out exactly as in the
-    single-suite operator. Per-suite n_eval/n_train are ONE driver-row
-    aggregate over documents joined back as a |suites|-row broadcast.
-    The final report is |suites| rows — a driver-scale artifact.
+    Scale shape: the scorer's, then a top-1 window per (suite, eval
+    item) and a per-suite aggregate; the report is |suites| rows, a
+    driver-scale artifact built on a VALUES frame of the scorer's
+    sizes.
 
-    Determinism: scores ride the capped idf micro-LONG contract; the
-    top-1 pick uses the (score desc, doc_id) total order; rates are
-    integer-ratio doubles on the 1e-6 grid, DEFINED 0.0 for an empty
-    eval set. The oracle mirrors every step including the cap and the
-    strong floor."""
-    sh = _doc_shingles(spark, sf_dir)
-    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        *[
-            F.sum(
-                F.when(F.col("doc_id") % m == 0, F.lit(1)).otherwise(F.lit(0))
-            ).alias(f"ev{m}")
-            for m in suites
-        ],
-    ).collect()[0]
-    # JVM-side VALUES LocalRelation, not createDataFrame (r17, guide
-    # §4.1): the pickled-RDD literal materialized through 32 Python-
-    # worker tasks per broadcast exchange — two near-idle 32-task
-    # stages (stage profile: ~6.5 s task runtime at ~0.08 CPU each).
-    # Values are driver-computed ints; no escaping concerns.
-    vals = ", ".join(
-        f"({m}L, {int(row[f'ev{m}'])}L,"
-        f" {int(row['n_docs']) - int(row[f'ev{m}'])}L)"
-        for m in suites
+    Determinism: the top-1 pick uses the (score desc, doc_id) total
+    order; rates are integer-ratio doubles on the 1e-6 grid, DEFINED
+    0.0 for an empty eval set. The oracle mirrors every step including
+    the cap and the strong floor."""
+    sizes, scored = _contam_scored(spark, sf_dir, suites, max_df)
+    suites_df = values_relation(
+        spark,
+        [(m, e, t) for m, (e, t) in sizes.items()],
+        "suite long, n_eval_docs long, n_train_docs long",
     )
-    suites_df = spark.sql(
-        "SELECT col1 AS suite, col2 AS n_eval_docs, col3 AS n_train_docs"
-        f" FROM VALUES {vals}"
-    )
-    suites_arr = F.array(*[F.lit(m).cast("long") for m in suites])
-    member = F.filter(
-        suites_arr, lambda s: F.col("doc_id") % s == F.lit(0)
-    )
-    ev = sh.select(
-        F.explode(member).alias("suite"),
-        F.col("doc_id").alias("eval_doc_id"),
-        "shingle",
-    )
-    ev_shingles = ev.select("suite", "shingle").distinct()
-    hits = (
-        sh.join(F.broadcast(ev_shingles), "shingle")
-        .filter(F.col("doc_id") % F.col("suite") != 0)
-        # keyed AQE-sized exchange before the cache — see _contam_scored
-        .repartition("suite", "shingle")
-        .cache()
-    )
-    df_ = (
-        hits.groupBy("suite", "shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
-        .join(F.broadcast(suites_df), "suite")
-    )
-    idf = F.log(
-        (F.col("n_train_docs").cast("double") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    rare = df_.select(
-        "suite",
-        "shingle",
-        F.floor(grid_round(idf, 6) * F.lit(1000000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("idf_micros"),
-    )
-    top1 = (
-        hits.join(F.broadcast(rare), ["suite", "shingle"])
-        .join(F.broadcast(ev), ["suite", "shingle"])
-        .groupBy("suite", "eval_doc_id", "doc_id")
-        .agg(F.sum("idf_micros").cast("long").alias("score_micros"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("suite", "eval_doc_id").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("rk") == 1)
-    )
+    top1 = scored.withColumn(
+        "rk",
+        F.row_number().over(
+            Window.partitionBy("suite", "eval_doc_id").orderBy(
+                F.col("score_micros").desc(), F.col("doc_id")
+            )
+        ),
+    ).filter(F.col("rk") == 1)
     per_suite = top1.groupBy("suite").agg(
         F.count(F.lit(1)).cast("long").alias("n_matched_eval"),
         F.sum(
@@ -1117,15 +1035,14 @@ def decontaminate_corpus(
     curation pipeline actually joins against its corpus before
     publishing.
 
-    Scale shape: rolls the shared :func:`_contam_scored` relation up
-    by ``doc_id`` (shuffle keyed on the train doc, map-side partials —
-    the transpose of the retrieval's per-eval-item grouping), then a
-    LEFT join from the train doc list — UNHINTED on both sides: the
-    per-doc aggregate is corpus-cardinality, so AQE picks broadcast at
-    test scale and a shuffled join at crawl scale (the r15/r16 hint
-    discipline). Unmatched docs keep with score 0.0. All-LONG surface
-    plus the micros/1e6 double."""
-    per_doc = _contam_scored(spark, sf_dir, max_df).groupBy("doc_id").agg(
+    Scale shape: rolls the :func:`_contam_scored` relation up by
+    ``doc_id`` (shuffle keyed on the train doc, map-side partials),
+    then a LEFT join from the train doc list, unhinted on both sides:
+    the per-doc aggregate is corpus-cardinality, so AQE broadcasts it
+    at test scale and shuffles it at crawl scale. Unmatched docs keep
+    with score 0.0. All-LONG surface plus the micros/1e6 double."""
+    _, scored = _contam_scored(spark, sf_dir, (EVAL_SET_MOD,), max_df)
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval_matches"),
         F.max("score_micros").cast("long").alias("top_micros"),
     )
@@ -1207,24 +1124,12 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_pairs = pairs.join(wa, "doc_a").join(wb, "doc_b").select(
         "doc_a", "doc_b", n_eq
     )
-    sizes = _doc_shingle_sizes(spark, sf_dir)
     inter = _shingle_pair_intersections(spark, sf_dir)
-    joined = (
-        est_pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
-    )
+    joined = _with_sizes(
+        spark, sf_dir, est_pairs.join(inter, ["doc_a", "doc_b"], "left")
+    ).withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
     est = grid_round(F.col("n_eq") / F.lit(N_HASHES), 6)
-    exact = grid_round(
-        F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c")), 6
-    )
+    exact = jaccard()
     return joined.select(
         "doc_a",
         "doc_b",
@@ -1236,7 +1141,6 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PAGERANK_ITERS = 5
-PAGERANK_D = 0.85  # damping; literals 0.15/0.85 mirrored in the oracle
 
 
 def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1565,19 +1469,15 @@ def neardup_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: every input is an already-shared relation (banded LSH
     pairs, the cached shingle-intersection counts, shingle sizes, and
-    simhash fingerprints); the joins key on doc ids and carry NO
-    broadcast hint (VERDICT r15: sizes and fingerprints are one row per
-    document — four forced corpus-cardinality broadcasts in one query
-    was the round's worst instance of the class). Pairs that share a
+    simhash fingerprints); the joins key on doc ids and carry no
+    broadcast hint, since sizes and fingerprints are one row per
+    document. Pairs that share a
     band but no shingle (possible only under hash collision) surface
     with c = 0 rather than dropping. Ratios are integer-ratio doubles
     on the 1e-6 grid; Hamming is pure integer (``bit_count(xor)``)."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
     inter = _shingle_pair_intersections(spark, sf_dir)
-    sizes = _doc_shingle_sizes(spark, sf_dir)
     fps = simhash_fingerprints(spark, sf_dir)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     fa = fps.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")
     )
@@ -1585,14 +1485,16 @@ def neardup_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b")
     )
     feat = (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("c", F.coalesce(F.col("c"), F.lit(0).cast("long")))
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _with_sizes(
+            spark,
+            sf_dir,
+            pairs.join(inter, ["doc_a", "doc_b"], "left").withColumn(
+                "c", F.coalesce(F.col("c"), F.lit(0).cast("long"))
+            ),
+        )
         .join(fa, "doc_a")
         .join(fb, "doc_b")
     )
-    jaccard = F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c"))
     containment = F.col("c") / F.least("n_a", "n_b")
     return feat.select(
         "doc_a",
@@ -1600,7 +1502,7 @@ def neardup_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c").alias("n_common"),
         "n_a",
         "n_b",
-        grid_round(jaccard, 6).alias("jaccard"),
+        jaccard().alias("jaccard"),
         grid_round(containment, 6).alias("containment"),
         F.expr("bit_count(sh_a ^ sh_b)").cast("long").alias(
             "simhash_hamming"
@@ -1949,34 +1851,22 @@ def _jaccard_verify(
     """Candidate-scoped exact Jaccard verification shared by the
     similarity-join tiers (prefix-filter flat/banded at
     PREFIX_JACCARD_T, the df-capped tier at its own lower threshold):
-    ``cands`` is a distinct (doc_a, doc_b) pair relation; output is
-    (doc_a, doc_b, jaccard) at >= t.
+    ``cands`` is a (doc_a, doc_b) pair relation, duplicates allowed;
+    output is the distinct (doc_a, doc_b, jaccard) at >= t.
 
-    r17 rewrite (guide §2.3/§1.2 — the distributed algorithm first):
-    the old form exploded each candidate pair back into (pair, shingle)
-    rows (|cands| x avg doc size intermediate — 6.5M rows for 125k
-    candidates at sf0.1) and hash-aggregated the matches per pair. Now
-    each doc's distinct-shingle set is collected ONCE (same bytes as
-    the shingle relation), the pair relation joins the two doc arrays,
-    and ``size(array_intersect(...))`` counts the overlap natively per
-    row — no pair-expanded intermediate, no second aggregate, and the
-    shuffle carries |sh| + |cands| rows instead of |cands| x |doc|.
-    Set sizes come from the SAME arrays (``size(shs)``) — callers no
-    longer join a separate per-doc size aggregate, and the candidate
-    distinct shrinks to the bare (doc_a, doc_b) key (§2.3: narrower
-    shuffle rows). Bit-equal: shingle rows are distinct per doc, so
-    both the intersection count and ``size(shs)`` match the old
-    aggregates exactly; jaccard math and grid rounding are unchanged.
-    Joins stay unhinted — the doc-array relation is corpus-cardinality
-    (AQE broadcasts it at test scale, shuffles it at 100 TB). The
-    doc-array relation is cached (CacheManager plan-dedup): BOTH join
-    sides of every verify read it, and all three tiers share it in one
-    session — without the cache the collect_list aggregate re-ran once
-    per side per query (measured +8 CPU-s/query at sf0.1). Released by
-    ``session.release_caches`` like the other shared intermediates."""
+    Scale shape: each doc's distinct-shingle set is collected once
+    (the same bytes as the shingle relation) and cached, since both
+    join sides of every verify and all three tiers read it; the pair
+    relation joins the two doc arrays and
+    ``size(array_intersect(...))`` counts the overlap per row, so the
+    shuffles carry |sh| + |cands| rows, never |cands| x |doc|. Set
+    sizes come from the same arrays. Joins stay unhinted: the
+    doc-array relation is corpus-cardinality. Determinism: shingle rows
+    are distinct per doc, so the counts are exact and :func:`jaccard`
+    is an integer-ratio double on the 1e-6 grid."""
     sets = sh.groupBy("doc_id").agg(
         F.collect_list("shingle").alias("shs")
-    ).persist(CORPUS_CACHE_LEVEL)
+    ).cache()
     inter = (
         cands.select("doc_a", "doc_b")
         .join(
@@ -1999,11 +1889,8 @@ def _jaccard_verify(
             F.size(F.array_intersect("shs_a", "shs_b")).alias("c"),
         )
     )
-    jaccard = F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c"))
     return (
-        inter.select(
-            "doc_a", "doc_b", grid_round(jaccard, 6).alias("jaccard")
-        )
+        inter.select("doc_a", "doc_b", jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= t)
         # The pair-level dedup happens HERE, on the thresholded output
         # (hundreds of rows), not on the candidate relation (hundreds of

@@ -41,9 +41,6 @@ from geektime_bigdata_spark.registry import table
 
 FEATURE_DIM = 8
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, n_bytes long, payload binary"
-)
 FEATURES_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, "
     f"feature array<double>, feature_norm double"

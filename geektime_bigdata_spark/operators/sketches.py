@@ -73,7 +73,7 @@ MG_COUNTERS = 16  # Misra-Gries counters per partition
 
 def _term_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per token occurrence, with the SAME empty-token filter as
-    text.py's ``_tokens`` — both corpus token-count definitions must
+    :func:`~text.token_tf` — both corpus token-count definitions must
     agree or the MG guarantee would be validated against a different N
     than the headline word counts.
 

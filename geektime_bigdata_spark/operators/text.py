@@ -28,38 +28,33 @@ from geektime_bigdata_spark.registry import ROW_WORK_BYTES, spread, table
 from geektime_bigdata_spark.session import session_memo
 
 
-def _tokens(df: DataFrame) -> DataFrame:
-    """``(doc_id, word)`` one row per token occurrence — X1 split + X2
-    explode (InvertedMain.scala:14-15,23-24)."""
-    return df.select(
-        "doc_id",
-        F.explode(F.split(F.col("text"), " ")).alias("word"),
-    ).filter(F.col("word") != "")
-
-
 def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact per-document term-frequency relation
-    ``(doc_id, word, tf)`` — ONE Arrow-vectorized corpus pass, memoized
-    per (session, sf_dir) and shared by the whole token family
-    (term_freq, word_counts, the inverted indexes, posting lists,
-    TF-IDF, BM25). r18, guide §4.2: the JVM split stays codegen'd, the
-    token ListArray's flat values buffer feeds a C++ ``group_by`` with
-    ``np.repeat`` of the doc ids over the list offsets — replacing the
-    explode + two-key hash aggregate that cost ~10 executor-CPU-s per
-    consumer at sf0.1 (measured A/B: 10.7 -> 0.9 CPU-s, identical
-    rows). Counts are exact integers, so batch boundaries cannot move
-    a value; empty tokens are filtered exactly like ``_tokens``. The
-    final groupBy-sum merges per-batch partials (each document's rows
-    are atomic within one batch, so partials are already per-document
-    counts — the sum is a cheap formality that keeps correctness
-    independent of that layout detail). Materialized once per
-    (session, sf_dir) through :func:`session_memo`."""
+    ``(doc_id, word, tf)`` over whitespace tokens, empty tokens dropped
+    and NULL-text documents skipped (as ``explode`` and the DuckDB
+    oracles skip them) — InvertedMain.scala:24-25's
+    ``((word, docId), 1) reduceByKey``. It is the one derivation of that
+    relation: the inverted indexes, posting lists, TF-IDF, BM25,
+    ``simhash_fingerprints`` and the unigram, entropy and vocabulary
+    statistics all read it.
+
+    Scale shape: one corpus pass; the JVM split stays codegen'd and
+    each Arrow batch's token list feeds a C++ ``group_by`` keyed on the
+    doc ids repeated over the list offsets, so only per-document
+    partials cross the one ``(doc_id, word)`` exchange. Determinism:
+    counts are exact integers, so batch boundaries cannot move a
+    value; the final groupBy-sum merges partials whatever the batch
+    layout. Materialized once per (session, sf_dir) through
+    :func:`session_memo`, so every consumer in a session shares one
+    checkpoint."""
     return session_memo(spark, sf_dir, _token_tf_pass)
 
 
 def _token_tf_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    docs = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     )
 
     def partials(batches):
@@ -69,19 +64,17 @@ def _token_tf_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         for batch in batches:
             arr = batch.column(1)
-            if arr.null_count:
-                raise ValueError("token_tf: NULL token array")
             offs = np.asarray(arr.offsets, dtype=np.int64)
             offs = offs - offs[0]
             flat = arr.flatten()
             if len(flat) == 0:
                 continue
-            ids = np.repeat(
-                np.asarray(batch.column(0), dtype=np.int64),
-                np.diff(offs),
+            # take() keeps a NULL doc_id a NULL group key, as explode does
+            ids = batch.column(0).take(
+                np.repeat(np.arange(len(batch)), np.diff(offs))
             )
             t = (
-                pa.table({"doc_id": pa.array(ids), "w": flat})
+                pa.table({"doc_id": ids, "w": flat})
                 .group_by(["doc_id", "w"])
                 .aggregate([("w", "count")])
             )
@@ -288,8 +281,9 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of computed rows AND the per-row logic genuinely needs Python
     (here a stand-in for a real tokenizer; a pure token-count split
     would be `posexplode` + native slicing). Executed per-partition in
-    the Python worker over batched rows; the lateral join keeps it a
-    narrow map — no shuffle. The DuckDB oracle reproduces the chunking
+    the Python worker over batched rows; the DataFrame lateral join
+    keeps it a narrow map — no shuffle — and registers no session-wide
+    function name. The DuckDB oracle reproduces the chunking
     with list slicing, so even this Python fan-out path is
     hash-verified."""
     from pyspark.sql.functions import udtf
@@ -307,12 +301,10 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chunk = toks[i : i + CHUNK_TOKENS]
                 yield doc_id, i // CHUNK_TOKENS, " ".join(chunk), len(chunk)
 
-    spark.udtf.register("gbs_chunk_docs", ChunkDocs)
-    return spark.sql(
-        "SELECT c.* FROM {documents}, "
-        "LATERAL gbs_chunk_docs(doc_id, text) AS c",
-        documents=table(spark, sf_dir, "documents"),
-    )
+    docs = table(spark, sf_dir, "documents")
+    return docs.lateralJoin(
+        ChunkDocs(F.col("doc_id").outer(), F.col("text").outer()).alias("c")
+    ).select("c.*")
 
 
 BM25_K1 = 1.2

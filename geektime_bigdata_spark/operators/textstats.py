@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geektime_bigdata_spark.functions import grid_round
+from geektime_bigdata_spark.functions import grid_round, jaccard
+from geektime_bigdata_spark.operators.text import token_tf
 from geektime_bigdata_spark.registry import (
     ARROW_PASS_BYTES,
     ROW_WORK_BYTES,
@@ -519,47 +520,26 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate scores high; the poor man's perplexity filter every
     curation stack runs before a neural one).
 
-    Scale shape: one token shuffle builds the frequency table; at test
-    scale it broadcasts, but a WEB-SCALE raw-token vocabulary is
-    billions of entries — there the hint comes off and the score join
-    becomes an ordinary shuffle join on ``word`` (or the freq table is
-    truncated to top-K with an OOV floor, the standard LM-filter
-    compromise); Spark's size-based selection makes that regression
-    automatic if the hint is dropped. Determinism: p(w) = cnt/total is
-    an integer-ratio
-    double (identical IEEE division); each token's ``ln p`` is
-    micro-quantized to a LONG before the per-doc sum (a raw double sum
-    would be accumulation-order-dependent), and the mean divides two
-    exact integers before one grid round. ``ln`` itself relies on both
-    engines' libm agreeing — empirically exact for tfidf/bm25 across
-    two driver rounds."""
-    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    # r17 (guide §2.3 aggregate-before-shuffle): everything downstream
-    # is a function of the per-doc term frequency, so the token explode
-    # runs ONCE into a (doc_id, word, tf) aggregate (map-side partials
-    # shrink the only token-scale shuffle); the corpus vocabulary, the
-    # token total (a sum over the vocab relation — the old toks.count()
-    # re-ran the explode as a second full pass), and the score join all
-    # read the tf relation. Per-token sums become tf-weighted integer
-    # sums — bit-identical (lp is quantized per WORD before weighting).
-    tf = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-        )
-        .filter(F.col("word") != "")
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
-    )
+    Scale shape: everything is a function of the shared per-document
+    term frequency :func:`~text.token_tf` — the vocabulary counts, the
+    token total (a driver scalar summed over the vocabulary) and the
+    score join all read it, and per-token sums become tf-weighted
+    integer sums. The score join is size-selected and unhinted: a test
+    vocabulary broadcasts, a WEB-SCALE raw-token vocabulary (billions
+    of entries) falls back to a shuffle join on ``word``. Determinism:
+    p(w) = cnt/total is an integer-ratio double (identical IEEE
+    division); each word's ``ln p`` is micro-quantized to a LONG before
+    the tf-weighted per-doc sum (a raw double sum would be
+    accumulation-order-dependent), and the mean divides two exact
+    integers before one grid round. ``ln`` relies on both engines'
+    libm agreeing."""
+    tf = token_tf(spark, sf_dir)
     freq = tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
     total = freq.agg(F.sum("cnt")).collect()[0][0]  # tiny driver scalar
     logp_micro = F.floor(
         F.log(F.col("cnt") / F.lit(float(total))) * F.lit(1e6) + F.lit(0.5)
     ).cast("long")
     return (
-        # size-selected join, deliberately unhinted: the tiny test vocab
-        # auto-broadcasts; a web-scale vocab degrades to a shuffle join
-        # instead of OOMing the driver (see docstring)
         tf.join(freq, "word")
         .select("doc_id", "tf", logp_micro.alias("lp"))
         .groupBy("doc_id")
@@ -632,36 +612,32 @@ def contrastive_negatives(
 
 
 def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage: the fraction of all corpus tokens falling in
-    the top-K most frequent words — the check run before fixing a
-    tokenizer/vocab size. Two-level plan: exact word counts (one
-    shuffle), deterministic top-K (count desc + word tiebreak,
-    TakeOrdered — no global sort), then a broadcast semi-flag join back
-    over the token stream and a single global ratio row. The top-K list
-    is K rows, broadcastable at any corpus scale."""
-    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    toks = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("word")
-    ).filter(F.col("word") != "")
+    """Vocabulary coverage ``(n_tokens, n_covered, coverage)``: the
+    fraction of all corpus tokens falling in the top-K most frequent
+    words — the check run before fixing a tokenizer/vocab size.
+
+    Scale shape: every count is a tf-weighted sum over the shared
+    per-document term frequency :func:`~text.token_tf`, never the
+    token stream: exact word counts (one shuffle), a deterministic
+    top-K (count desc + word tiebreak, TakeOrdered — no global sort),
+    then a broadcast flag join of the K-row list back onto the tf rows
+    and one global ratio row. Determinism: integer sums and one
+    integer-ratio double on the 1e-6 grid."""
+    tf = token_tf(spark, sf_dir)
     topk = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
+        tf.groupBy("word")
+        .agg(F.sum("tf").alias("c"))
         .orderBy(F.col("c").desc(), "word")
         .limit(VOCAB_TOP_K)
         .select("word", F.lit(1).alias("in_vocab"))
     )
+    covered = F.sum(F.col("tf") * F.coalesce(F.col("in_vocab"), F.lit(0)))
     return (
-        toks.join(F.broadcast(topk), "word", "left")
+        tf.join(F.broadcast(topk), "word", "left")
         .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.coalesce(F.col("in_vocab"), F.lit(0)))
-            .cast("long")
-            .alias("n_covered"),
-            grid_round(
-                F.sum(F.coalesce(F.col("in_vocab"), F.lit(0)))
-                / F.count(F.lit(1)),
-                6,
-            ).alias("coverage"),
+            F.coalesce(F.sum("tf"), F.lit(0)).alias("n_tokens"),
+            covered.cast("long").alias("n_covered"),
+            grid_round(covered / F.sum("tf"), 6).alias("coverage"),
         )
     )
 
@@ -1055,11 +1031,10 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair expansion joins vocabularies on the TOKEN (posting-list
     style, like the shingle pair generator) so cost is bounded by
     per-token source lists, never |vocab_a| x |vocab_b|. Output is
-    O(sources^2) rows — a driver-scale report. Integer-ratio Jaccard
-    on the 1e-6 grid."""
+    O(sources^2) rows — a driver-scale report. :func:`jaccard` on the
+    1e-6 grid."""
     docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    # cached (r17, guide §2.4): three consumers (the size aggregate and
-    # both sides of the token join) re-ran the explode+distinct pass
+    # cached: the size aggregate and both sides of the token join read it
     v = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).distinct().cache()
@@ -1085,9 +1060,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_a",
             "n_b",
             "c",
-            grid_round(
-                F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c")), 6
-            ).alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
     )
 
@@ -1295,23 +1268,13 @@ def token_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantized to LONG before the per-doc sum (associative), and
     the final negation/division is one grid round. ``ln`` relies on
     both engines' libm agreeing — empirically exact across three driver
-    rounds of tfidf/bm25/logprob. One (doc, word) shuffle, output is
-    one row per doc."""
-    docs = spread(table(spark, sf_dir, "documents"), ROW_WORK_BYTES)
-    tf = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-        )
-        .filter(F.col("word") != "")
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    # r17 (guide §2.4): n_tokens comes from a window over the SAME
-    # doc_id key instead of a self-join — the old plan computed the tf
-    # aggregate twice (once per join side) and paid a third exchange
-    # for the join; the window reuses one doc_id-partitioned exchange
-    # and the final aggregate rides the same partitioning (doc_id is a
-    # subset of its grouping key), so the whole op is two exchanges.
+    rounds of tfidf/bm25/logprob.
+
+    Scale shape: reads the shared per-document term frequency
+    :func:`~text.token_tf`; n_tokens is a window over doc_id, and the
+    final aggregate rides that one doc_id exchange (doc_id is a subset
+    of its grouping key). Output is one row per doc."""
+    tf = token_tf(spark, sf_dir)
     n_tokens = F.sum("tf").over(Window.partitionBy("doc_id"))
     p = F.col("tf") / F.col("n_tokens")
     term_micros = F.floor(

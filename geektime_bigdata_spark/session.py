@@ -83,29 +83,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-# Storage policy for CORPUS-CARDINALITY cached relations — the ONE
-# decision point VERDICT r17 "What's wrong" #1 asked for (decided r18).
-# The operator layer's shared intermediates split into two classes:
-#
-# - bounded relations (vocabulary/df tables, per-doc stat rows, the
-#   centroid/index memos): plain `.cache()` — they are the persisted
-#   side tables a production pipeline keeps anyway.
-# - corpus-cardinality relations (the (doc, shingle) relation, the
-#   per-doc shingle-set arrays): `.persist(CORPUS_CACHE_LEVEL)`.
-#
-# CORPUS_CACHE_LEVEL is MEMORY_AND_DISK_DESER — byte-identical to what
-# `.cache()` already did (DataFrame cached batches are the compressed
-# in-memory columnar format either way), so declaring it costs no bench
-# movement; the point is that the knob now EXISTS and is documented: at
-# 100 TB the right setting is the serialized MEMORY_AND_DISK (or
-# DISK_ONLY for one-pass-per-stage consumers) plus a real memory
-# budget, and release_caches/the bench already bound the lifecycle
-# (caches fill inside the timed region and are dropped after each
-# suite). See SCALING.json "cache_policy".
-from pyspark import StorageLevel  # noqa: E402
-
-CORPUS_CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
-
 _MEMOS: dict = {}  # (build, applicationId, sf_dir) -> value
 _FILL_LOCKS: dict = {}  # same key -> the lock its one fill holds
 _FILL_LOCKS_GUARD = threading.Lock()

@@ -37,12 +37,10 @@ PKG = os.path.join(os.path.dirname(__file__), "..", "geektime_bigdata_spark")
 ALLOWLIST = {
     "operators/dedup.py::benchmark_contamination": 1,  # eval shingle set
     "operators/dedup.py::boilerplate_ngrams": 1,  # threshold scalar
-    # eval-bounded x3 — the shared scoring relation of the
-    # contamination family (retrieval + decontaminate_corpus)
-    "operators/dedup.py::_contam_scored": 3,
     # eval-bounded x3 (suite-tagged eval shingles / capped idf / eval
-    # docs) + two |suites|-row frames (sizes, per-suite aggregate)
-    "operators/dedup.py::contamination_suite_report": 5,
+    # docs) — the one scorer of the contamination family
+    "operators/dedup.py::_contam_scored": 3,
+    "operators/dedup.py::contamination_suite_report": 1,  # |suites| rows
     "operators/dedup.py::dedup_clusters": 1,  # size-gated fast-path labels
     "operators/dedup.py::ngram_jaccard_pairs_dfcapped": 1,  # hot shingles
     "operators/etl.py::clipped_value_stats": 1,  # per-event_type bounds

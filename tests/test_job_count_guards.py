@@ -43,6 +43,9 @@ CEILINGS = [
     # r18: collected top-k windows + literal replace chains — 20 -> 12
     ("bpe_train_merges_batched", 12, 15),
     ("bpe_train_merges", 12, 15),
+    # reads the shared token_tf memo instead of its own explode +
+    # (doc_id, word) aggregate: 5 -> 2 warm jobs
+    ("token_entropy_scores", 2, 4),
 ]
 
 
