@@ -19,7 +19,9 @@ summary, and the final line is one JSON object for machine consumption.
 
 ``profile`` warms each named query, runs it ``--reps`` times under
 :func:`geektime_bigdata_spark.profile.profile` and prints one JSON line
-per query: the last rep's record plus each rep's wall and tree CPU.
+per query: the last rep's record plus each rep's wall, tree CPU and
+``build_s`` — the part of the wall spent before the action, until the
+query callable returns its DataFrame (driver time outside jobs).
 """
 
 from __future__ import annotations
@@ -154,11 +156,13 @@ def _profile(spark, queries, names, sf_dir, reps) -> None:
     from geektime_bigdata_spark.profile import _tree_cpu_seconds, profile
 
     for name in names:
-        walls, cpus = [], []
+        walls, cpus, builds = [], [], []
 
         def timed(query=queries[name]) -> None:
             c0, t0 = _tree_cpu_seconds(), time.perf_counter()
-            query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = query(spark, sf_dir)
+            builds.append(round(time.perf_counter() - t0, 3))
+            df.write.format("noop").mode("overwrite").save()
             walls.append(round(time.perf_counter() - t0, 3))
             c1 = _tree_cpu_seconds()  # None where /proc is unreadable
             cpus.append(None if None in (c0, c1) else round(max(c1 - c0, 0.0), 2))
@@ -167,7 +171,8 @@ def _profile(spark, queries, names, sf_dir, reps) -> None:
         for _ in range(max(reps, 1)):
             record = profile(spark, timed)
         print(json.dumps({"name": name, "sf_dir": sf_dir, **record,
-                          "wall_s": walls[1:], "cpu_s": cpus[1:]}), flush=True)
+                          "wall_s": walls[1:], "cpu_s": cpus[1:],
+                          "build_s": builds[1:]}), flush=True)
 
 
 if __name__ == "__main__":

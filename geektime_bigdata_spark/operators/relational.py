@@ -295,10 +295,13 @@ def sql_udf_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Declarative body = Catalyst inlines it like a macro: no Python, no
     serialization, full codegen — unlike ``spark.udf.register``. The
     DuckDB oracle expands the same expression inline."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION gbs_grid6(x DOUBLE) "
-        "RETURNS DOUBLE RETURN floor(x * 1000000.0 + 0.5) / 1000000.0"
-    )
+    if not spark.catalog.functionExists("gbs_grid6"):
+        # once per session; two threads racing past the check both
+        # create it, which is harmless because the statement replaces
+        spark.sql(
+            "CREATE OR REPLACE TEMPORARY FUNCTION gbs_grid6(x DOUBLE) "
+            "RETURNS DOUBLE RETURN floor(x * 1000000.0 + 0.5) / 1000000.0"
+        )
     return spark.sql(
         """
         SELECT lang,

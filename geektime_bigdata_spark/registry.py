@@ -16,6 +16,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from geektime_bigdata_spark.session import session_memo
 
 TABLES = (
     "region",
@@ -47,14 +50,17 @@ _NANOS_TS_COLS = {
 }
 
 
-def _normalize_timestamps(name: str, df: DataFrame) -> DataFrame:
+def _normalize_timestamps(name: str, df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` (read with ``schema``) with its timestamp columns as LTZ.
+    The types come from ``schema``, not ``df.schema``, which would cost
+    the driver another analysis round trip."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     for col in _NANOS_TS_COLS.get(name, ()):
-        if col not in df.columns:
+        if col not in schema.fieldNames():
             continue
-        dtype = df.schema[col].dataType
+        dtype = schema[col].dataType
         if isinstance(dtype, LongType):
             # integer division: double math would lose sub-microsecond bits
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
@@ -77,15 +83,38 @@ def load_tables(
     return out
 
 
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    return spark.read.parquet(path).schema
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of the parquet at ``path``, inferred once per session.
+
+    ``spark.read.parquet(path)`` infers the schema on every call, and
+    that inference (``mergeSchemasInParallel``) is one Spark job even
+    for a single file. This infers it once, through
+    :func:`...session.session_memo` keyed by the path, and
+    :func:`...session.release_caches` forgets it. The contract, the same
+    one the ``token_tf`` memo relies on: the files under ``path`` keep
+    their schema between ``release_caches`` calls."""
+    return session_memo(spark, path, _parquet_schema)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a single table without touching the view catalog."""
+    """Load a single table without touching the view catalog.
+
+    The read takes its schema from :func:`parquet_schema`, so opening a
+    table runs no Spark job. Only the schema is memoized: each call
+    returns a fresh DataFrame with fresh attribute ids, which a
+    self-join of two ``table`` calls needs."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name in _NANOS_TS_COLS:
         # runtime SQL conf; set defensively for driver-provided sessions
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return _normalize_timestamps(name, df)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = parquet_schema(spark, path)
+    return _normalize_timestamps(name, spark.read.schema(schema).parquet(path), schema)
 
 
 # Bytes of input per task for each cost class :func:`spread` serves.

@@ -32,6 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from geektime_bigdata_spark.registry import (
     STATE_PARTITION_BYTES,
     _normalize_timestamps,
+    parquet_schema,
     spread_width,
     table,
 )
@@ -51,19 +52,21 @@ def _events_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """File-source stream over the events parquet, with the same ts
     normalization as the batch registry, and its state-partition width.
 
-    File streams need an explicit schema; the one batch read that
-    supplies it also supplies the width — :func:`...registry.spread_width`
-    of the scan at ``STATE_PARTITION_BYTES`` — so a runner start pays a
-    single schema-inference job."""
+    File streams need an explicit schema; it comes from the registry's
+    session schema memo (:func:`...registry.parquet_schema`), and the
+    width is :func:`...registry.spread_width` of a batch scan read with
+    that schema at ``STATE_PARTITION_BYTES`` — so only the session's
+    first read of ``events`` pays a schema-inference job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    path = os.path.join(sf_dir, "events.parquet")
+    schema = parquet_schema(spark, path)
     stream = (
-        spark.readStream.schema(raw.schema)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    width = spread_width(raw, STATE_PARTITION_BYTES)
-    return _normalize_timestamps("events", stream), width
+    width = spread_width(spark.read.schema(schema).parquet(path), STATE_PARTITION_BYTES)
+    return _normalize_timestamps("events", stream, schema), width
 
 
 def _start(writer, spark: SparkSession, width: int, conf: dict | None = None):

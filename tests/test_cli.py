@@ -72,7 +72,8 @@ def test_cli_publish_writes_partitioned_corpus(spark, capsys, tmp_path):
 
 def test_cli_profile_prints_one_record(spark, sf_dir, capsys):
     """``profile`` warms the query, then prints one JSON line whose
-    counts match the pinned warm profile of word_counts."""
+    counts match the pinned warm profile of word_counts, with each
+    rep's build time inside its wall."""
     import json
 
     from tests.test_profile import WORD_COUNTS_WARM
@@ -81,4 +82,5 @@ def test_cli_profile_prints_one_record(spark, sf_dir, capsys):
     rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rec["name"] == "word_counts" and rec["executions"]
     assert (rec["jobs"], rec["stages"], rec["skipped_stages"]) == WORD_COUNTS_WARM
-    assert len(rec["wall_s"]) == len(rec["cpu_s"]) == 1
+    assert len(rec["wall_s"]) == len(rec["cpu_s"]) == len(rec["build_s"]) == 1
+    assert 0 <= rec["build_s"][0] <= rec["wall_s"][0]
